@@ -16,7 +16,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from kafkastreamsinteractivequeries_spark.plans.queries import Query, QueryResponse
+from kafkastreamsinteractivequeries_spark.plans.queries import (
+    KeyQuery,
+    MultiKeyQuery,
+    Query,
+    QueryResponse,
+)
 
 
 class InteractiveQueryService:
@@ -28,6 +33,11 @@ class InteractiveQueryService:
 
     def execute(self, query: Query) -> DataFrame:
         return query.apply(self.serving_df, key_col=self.key_col)
+
+    def _execute_with_info(self, query: Query) -> tuple[DataFrame, list[str]]:
+        """``execute`` plus the ``executionInfo`` lines that name what
+        the frame reads (subclasses add the snapshot they resolved)."""
+        return self.execute(query), []
 
     #: default collect cap for ``execute_response`` — matches the REST
     #: layer's cap; an unlimited default is a driver-OOM invitation at
@@ -48,14 +58,14 @@ class InteractiveQueryService:
             # predicate compile + Catalyst analysis can both fail (bad
             # syntax, unknown column) — the envelope captures either,
             # mirroring QueryResponse.withError (QueryResponse.java:7-13).
-            df = self.execute(query)
+            df, info = self._execute_with_info(query)
             rows = df.limit(collect_limit).collect() if collect_limit else df.collect()
         except Exception as exc:
             return QueryResponse.with_error(str(exc))
         resp = QueryResponse.with_result([r.asDict() for r in rows])
         resp.host_information = "spark-driver"
         resp.add_execution_info(
-            self.store_name, [f"{type(query).__name__} over {len(rows)} rows"]
+            self.store_name, info + [f"{type(query).__name__} over {len(rows)} rows"]
         )
         return resp
 
@@ -84,7 +94,7 @@ class InteractiveQueryService:
                 f"page_size must be >= 1, got {page_size}"
             ), None
         try:
-            df = self.execute(query)
+            df, info = self._execute_with_info(query)
             if after is not None:
                 df = df.filter(F.col(self.key_col) > after)
             rows = df.orderBy(self.key_col).limit(page_size + 1).collect()
@@ -97,7 +107,7 @@ class InteractiveQueryService:
         resp.host_information = "spark-driver"
         resp.add_execution_info(
             self.store_name,
-            [
+            info + [
                 f"{type(query).__name__} page of {len(rows)} rows"
                 + (f", cursor={next_cursor!r}" if next_cursor is not None else ", last page")
             ],
@@ -106,19 +116,25 @@ class InteractiveQueryService:
 
 
 class LiveSnapshotQueryService(InteractiveQueryService):
-    """An ``InteractiveQueryService`` that re-resolves the LATEST
-    committed snapshot of a ``ManifestServingSink`` on every query —
-    the serving shape for a long-lived REST app over a continuously
-    upserting stream (the reference's two-instance failover scenario,
+    """An ``InteractiveQueryService`` that serves the LATEST committed
+    snapshot of a ``ManifestServingSink`` on every query — the serving
+    shape for a long-lived REST app over a continuously upserting
+    stream (the reference's two-instance failover scenario,
     ``InteractiveQueriesIntegrationTest.java:100-158``, collapses to
     this: readers always see a complete committed snapshot, across
     stream restarts, because the manifest log survives the stream).
 
-    Each request pays one manifest resolve (a tiny JSON read) + a
-    pruned parquet scan of the aggregate — independent of ingest
-    volume.  Snapshot isolation comes from the sink's commit protocol:
-    a query never observes a partially-replaced key, and successive
-    reads only ever move FORWARD through committed versions.
+    Cost per request: one listing of the manifest directory (the
+    freshness check).  The manifest and file index of a version are
+    built once, when the first request after its commit arrives.
+    ``KeyQuery`` and ``MultiKeyQuery`` read only their keys'
+    directories — the route-to-owning-partition of
+    ``StockController.java:364-375`` — and still apply their own
+    predicate; range and filtered queries scan the snapshot's full
+    frame.  Snapshot isolation comes from the sink's commit protocol:
+    a query never observes a partially-replaced key, successive reads
+    only ever move FORWARD through committed versions, and
+    ``executionInfo`` names the version served (``snapshot v<id>``).
     """
 
     def __init__(self, spark, sink, key_col: str = "symbol", store_name: str = "stock-aggregation-state-store"):
@@ -134,3 +150,17 @@ class LiveSnapshotQueryService(InteractiveQueryService):
     def serving_df(self, _df) -> None:
         # the base __init__ assigns a placeholder; live reads win
         pass
+
+    def execute(self, query: Query) -> DataFrame:
+        return self._execute_with_info(query)[0]
+
+    def _execute_with_info(self, query: Query) -> tuple[DataFrame, list[str]]:
+        version = self._sink.latest_version(self._spark)
+        keys = None
+        if self.key_col == self._sink.partition_col:
+            if isinstance(query, KeyQuery):
+                keys = (query.key,)
+            elif isinstance(query, MultiKeyQuery):
+                keys = query.keys
+        df = self._sink.read(self._spark, keys=keys, version=version)
+        return query.apply(df, key_col=self.key_col), [f"snapshot v{version}"]

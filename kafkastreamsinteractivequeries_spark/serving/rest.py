@@ -223,7 +223,14 @@ def create_app(
     def partition_for_key(key: str):
         from kafkastreamsinteractivequeries_spark.functions import partitioning
 
-        n = int(request.args.get("partitions", "32"))
+        raw = request.args.get("partitions", "32")
+        try:
+            n = int(raw)
+        except ValueError:
+            n = 0
+        if n < 1:
+            return jsonify(_envelope(QueryResponse.with_error(
+                f"partitions must be a positive integer, got {raw!r}"))), 400
         scheme = request.args.get("scheme", "kafka")
         if scheme == "kafka":
             # exact reference parity: toPositive(murmur2(key)) % n

@@ -28,6 +28,8 @@ latest aggregate per key; ``InteractiveQueryService`` points at it.
 from __future__ import annotations
 
 import json
+import threading
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -144,10 +146,18 @@ class ManifestServingSink:
 
     Commit protocol (per micro-batch):
 
+    0. guard: list the manifest directory.  If ``manifest/v<id>.json``
+       already exists the batch is a committed replay (restart
+       redelivery) and the call does nothing: rewriting its data
+       directory would rename the part files out from under every
+       reader of the published version.  If a NEWER version exists,
+       the query's checkpoint does not belong to this store (a fresh
+       checkpoint restarts batch ids at 0), so the call raises instead
+       of deleting a directory the newest manifest still references.
     1. data: write the batch's rows to ``data/batch-<id>/_bucket=<key>/``
-       (fresh directory — never mutated after commit; a batch REPLAY
-       rewrites the same directory before its manifest exists, so
-       replays are idempotent).
+       (fresh directory — never mutated after commit; a replay of a
+       batch whose manifest never landed rewrites the directory before
+       any manifest references it).
     2. manifest: merge {key → data dir} over the previous snapshot and
        write ``manifest/v<id>.json`` via temp-file + rename.  Rename of
        a closed file to a NEW name is the atomic commit primitive on
@@ -156,15 +166,30 @@ class ManifestServingSink:
        conditional-put wrapper — same contract as every rename-based
        committer.)
 
+    Read cost: every ``read`` lists the manifest directory once to find
+    the newest committed version, so the first read after a commit
+    already serves it.  The manifest, the file index and the schema of
+    a version are built once per (version, session) and reused until a
+    newer version commits; rows are never cached.  ``read(spark,
+    keys=...)`` lists and scans only those keys' directories and reuses
+    the snapshot's schema, so a point lookup runs no schema-inference
+    job.
+
     Scale: per-batch work ∝ updated keys (new files + one small JSON),
-    reads prune to exactly the referenced per-key directories, and old
-    snapshots remain readable until ``vacuum()`` — which only deletes
-    batch directories no current key references.
+    and old snapshots remain readable until ``vacuum()`` — which only
+    deletes batch directories no current key references.
     """
 
     def __init__(self, path: str, partition_col: str = "symbol"):
         self.path = path.rstrip("/")
         self.partition_col = partition_col
+        # (session, version, {key dir name: data dir}, full frame) of the
+        # newest version read so far
+        self._memo = None
+        self._memo_lock = threading.Lock()
+        # (session, FileSystem, Path class, ExternalCatalogUtils): py4j
+        # pays one round trip per package segment of a class lookup
+        self._jvm_refs = None
 
     # -- hadoop FS helpers (portable across local/HDFS paths) --------------
 
@@ -177,22 +202,32 @@ class ManifestServingSink:
     def _manifest_dir(self) -> str:
         return f"{self.path}/manifest"
 
-    def _latest_manifest(self, spark: SparkSession) -> dict[str, str]:
-        fs, jvm = self._fs(spark, self._manifest_dir())
-        mdir = jvm.org.apache.hadoop.fs.Path(self._manifest_dir())
-        if not fs.exists(mdir):
-            return {}
-        versions = [
-            st.getPath().getName()
-            for st in fs.listStatus(mdir)
-            if st.getPath().getName().startswith("v")
-        ]
-        if not versions:
-            return {}
-        latest = jvm.org.apache.hadoop.fs.Path(
-            f"{self._manifest_dir()}/{max(versions)}"
-        )
-        stream = fs.open(latest)
+    def _refs(self, spark: SparkSession):
+        refs = self._jvm_refs
+        if refs is None or refs[0] is not spark:
+            fs, jvm = self._fs(spark, self.path)
+            refs = self._jvm_refs = (
+                spark,
+                fs,
+                jvm.org.apache.hadoop.fs.Path,
+                jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils,
+            )
+        return refs[1:]
+
+    def latest_version(self, spark: SparkSession) -> int | None:
+        """Id of the newest committed manifest, or None before the first
+        commit: one glob over the manifest directory."""
+        fs, path_cls, _ = self._refs(spark)
+        found = fs.globStatus(path_cls(f"{self._manifest_dir()}/v[0-9]*.json"))
+        if not found:
+            return None
+        # globStatus sorts by name; zero-padded names sort by version
+        return int(found[len(found) - 1].getPath().getName()[1:-5])
+
+    def _manifest(self, spark: SparkSession, version: int) -> dict[str, str]:
+        path = f"{self._manifest_dir()}/v{version:020d}.json"
+        fs, jvm = self._fs(spark, path)
+        stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
         try:
             data = bytes(
                 jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
@@ -201,10 +236,25 @@ class ManifestServingSink:
             stream.close()
         return json.loads(data)
 
+    def _latest_manifest(self, spark: SparkSession) -> dict[str, str]:
+        version = self.latest_version(spark)
+        return {} if version is None else self._manifest(spark, version)
+
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
             return
         spark = batch_df.sparkSession
+        newest = self.latest_version(spark)
+        if newest is not None and newest > batch_id:
+            raise RuntimeError(
+                f"serving store {self.path} already has committed manifest "
+                f"v{newest} > incoming micro-batch id {batch_id}: the query's "
+                "checkpoint does not match this store (fresh checkpoint "
+                "against an existing store?). Restore the original "
+                "checkpoint or point the query at a new store path."
+            )
+        if newest == batch_id:
+            return  # committed replay: its snapshot is already published
         out = f"{self.path}/data/batch-{batch_id}"
         # _bucket duplicates the key into the directory layout while the
         # data files keep the real column — leaf dirs stay self-contained
@@ -220,7 +270,7 @@ class ManifestServingSink:
             for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(out))
             if st.getPath().getName().startswith("_bucket=")
         }
-        snapshot = self._latest_manifest(spark)
+        snapshot = {} if newest is None else self._manifest(spark, newest)
         snapshot.update(written)
 
         mdir = self._manifest_dir()
@@ -235,13 +285,49 @@ class ManifestServingSink:
         if not fs.rename(tmp, final) and not fs.exists(final):
             raise IOError(f"manifest commit failed for batch {batch_id}")
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        """Latest consistent snapshot (the queryable serving table)."""
-        snapshot = self._latest_manifest(spark)
-        if not snapshot:
+    def _snapshot(self, spark: SparkSession, version: int) -> tuple[dict[str, str], DataFrame]:
+        """Manifest and full frame of ``version``, built once per
+        (version, session); only a newer version replaces the memo."""
+        memo = self._memo
+        if memo is not None and memo[0] is spark and memo[1] == version:
+            return memo[2], memo[3]
+        files = self._manifest(spark, version)
+        if not files:
+            raise FileNotFoundError(f"manifest v{version} under {self.path} is empty")
+        df = spark.read.parquet(*sorted(set(files.values())))
+        df = df.drop("_bucket") if "_bucket" in df.columns else df
+        with self._memo_lock:
+            cur = self._memo
+            if cur is None or cur[0] is not spark or cur[1] < version:
+                self._memo = (spark, version, files, df)
+        return files, df
+
+    def read(
+        self,
+        spark: SparkSession,
+        keys: Iterable[str] | None = None,
+        version: int | None = None,
+    ) -> DataFrame:
+        """Committed snapshot ``version`` (default: the newest) of the
+        serving table.  With ``keys``, the frame covers only those keys'
+        directories; unknown keys contribute no rows."""
+        if version is None:
+            version = self.latest_version(spark)
+        if version is None:
             raise FileNotFoundError(f"no committed manifest under {self.path}")
-        df = spark.read.parquet(*sorted(set(snapshot.values())))
-        return df.drop("_bucket") if "_bucket" in df.columns else df
+        files, full = self._snapshot(spark, version)
+        if keys is None:
+            return full
+        # manifest keys are the escaped partition directory names
+        to_dir = self._refs(spark)[2]
+        dirs = sorted({
+            files[name]
+            for name in (to_dir.getPartitionValueString(k) for k in keys)
+            if name in files
+        })
+        if not dirs:
+            return spark.createDataFrame([], full.schema)
+        return spark.read.schema(full.schema).parquet(*dirs)
 
     def vacuum(self, spark: SparkSession) -> list[str]:
         """Delete batch directories no current key references; returns

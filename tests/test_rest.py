@@ -10,12 +10,16 @@ import pytest
 from kafkastreamsinteractivequeries_spark.operators.aggregation import (
     aggregate_transactions,
 )
-from kafkastreamsinteractivequeries_spark.plans.service import InteractiveQueryService
+from kafkastreamsinteractivequeries_spark.plans.service import (
+    InteractiveQueryService,
+    LiveSnapshotQueryService,
+)
 from kafkastreamsinteractivequeries_spark.serving.rest import create_app
 from kafkastreamsinteractivequeries_spark.sources.tables import (
     load_table,
     transactions_from_events,
 )
+from kafkastreamsinteractivequeries_spark.streaming.pipeline import ManifestServingSink
 
 flask = pytest.importorskip("flask")
 
@@ -97,6 +101,13 @@ def test_partition_for_key(client):
     ).get_json()
     assert spark_scheme["scheme"] == "spark" and spark_scheme["partition"] in (0, 1)
     assert client.get("/streams-iq/partition/x?scheme=bogus").status_code == 400
+    # a malformed or non-positive partition count is a client error
+    for bad in ("abc", "0", "-3"):
+        r = client.get(f"/streams-iq/partition/purchase?partitions={bad}")
+        assert r.status_code == 400, bad
+        body = r.get_json()
+        assert body["result"] is None
+        assert "partitions must be a positive integer" in body["errorMessage"]
 
 
 def test_status(client):
@@ -238,3 +249,127 @@ def test_nonpositive_limit_rejected_on_both_paginated_endpoints(client, spark, s
     )
     assert r.status_code == 400
     assert "limit must be >= 1" in r.get_json()["errorMessage"]
+
+
+def test_live_snapshot_reads_follow_each_commit(spark, tmp_path):
+    # The live store's reads reuse one snapshot per committed manifest
+    # version; that reuse must never serve a version older than the last
+    # commit.  The sink is called directly (no stream), one batch per
+    # commit; number_shares identifies the batch that wrote a key.
+    schema = "symbol string, buys double, sells double, number_shares long"
+    sink = ManifestServingSink(str(tmp_path / "live"))
+
+    def commit(rows, batch_id):
+        sink(spark.createDataFrame(rows, schema), batch_id)
+
+    app = create_app(LiveSnapshotQueryService(spark, sink))
+    app.config["TESTING"] = True
+    c = app.test_client()
+
+    def get(url):
+        r = c.get(url)
+        assert r.status_code == 200, url
+        body = r.get_json()
+        assert body["errorMessage"] is None, body
+        lines = body["executionInfo"]["stock-aggregation-state-store"]
+        versions = [int(x[len("snapshot v"):]) for x in lines if x.startswith("snapshot v")]
+        assert len(versions) == 1, lines
+        return {row["symbol"]: row["number_shares"] for row in body["result"]}, versions[0]
+
+    commit([("A", 1.0, 0.0, 10), ("B", 1.0, 0.0, 20), ("C", 1.0, 0.0, 30), ("x:y", 1.0, 0.0, 40)], 0)
+    assert get("/streams-iq/keyquery/A") == ({"A": 10}, 0)
+    assert get("/streams-iq/range") == ({"A": 10, "B": 20, "C": 30, "x:y": 40}, 0)
+    # a key whose directory name is escaped on disk is still found
+    assert get("/streams-iq/keyquery/x:y") == ({"x:y": 40}, 0)
+
+    # the first request of each kind after a commit sees that commit
+    commit([("A", 1.0, 0.0, 11)], 1)
+    assert get("/streams-iq/keyquery/A") == ({"A": 11}, 1)
+    commit([("B", 1.0, 0.0, 21)], 2)
+    # keys last written by batches 0, 1 and 2, served from snapshot v2
+    assert get("/streams-iq/multikey/A,B,C") == ({"A": 11, "B": 21, "C": 30}, 2)
+    commit([("C", 1.0, 0.0, 31)], 3)
+    assert get("/streams-iq/range?lower=B&upper=C") == ({"B": 21, "C": 31}, 3)
+    body, version = get("/streams-iq/range?filter=@.number_shares > 25&limit=1")
+    assert body == {"C": 31} and version == 3
+
+    # unknown keys: 200 with an empty result, alone or beside known ones
+    assert get("/streams-iq/keyquery/NOPE") == ({}, 3)
+    assert get("/streams-iq/multikey/NOPE,A") == ({"A": 11}, 3)
+
+    # vacuum deletes the fully superseded batch directories; every read
+    # path still works over the current snapshot
+    commit([("A", 1.0, 0.0, 12), ("B", 1.0, 0.0, 22)], 4)
+    assert sorted(d.rsplit("/", 1)[1] for d in sink.vacuum(spark)) == ["batch-1", "batch-2"]
+    assert get("/streams-iq/keyquery/B") == ({"B": 22}, 4)
+    assert get("/streams-iq/multikey/A,C,x:y") == ({"A": 12, "C": 31, "x:y": 40}, 4)
+    assert get("/streams-iq/range") == ({"A": 12, "B": 22, "C": 31, "x:y": 40}, 4)
+
+
+def test_live_snapshot_memo_under_concurrent_commits(spark, tmp_path):
+    # Reader threads share the sink's one-entry snapshot memo while
+    # batches commit.  Batch b writes number_shares = b for every key, so
+    # a response is consistent when all its rows carry the version its
+    # executionInfo names; that version must never be older than a
+    # commit that returned before the request began, nor move back.
+    import sys
+    import threading
+    import time
+
+    from kafkastreamsinteractivequeries_spark.plans.queries import KeyQuery, MultiKeyQuery
+
+    schema = "symbol string, buys double, sells double, number_shares long"
+    sink = ManifestServingSink(str(tmp_path / "live"))
+
+    def commit(batch_id):
+        rows = [(k, 1.0, 0.0, batch_id) for k in ("A", "B", "C")]
+        sink(spark.createDataFrame(rows, schema), batch_id)
+
+    commit(0)
+    svc = LiveSnapshotQueryService(spark, sink)
+    committed = [0]
+    stop = threading.Event()
+    bad: list = []
+    served: dict[int, list[int]] = {}
+
+    def reader(idx):
+        versions = served.setdefault(idx, [])
+        while not stop.is_set():
+            floor = committed[-1]
+            query = KeyQuery("B") if idx % 2 else MultiKeyQuery.with_keys(["A", "C"])
+            resp = svc.execute_response(query)
+            if resp.error_message:
+                bad.append(resp.error_message)
+                return
+            line = resp.execution_info["stock-aggregation-state-store"][0]
+            version = int(line[len("snapshot v"):])
+            if version < floor or (versions and version < versions[-1]):
+                bad.append(("stale", idx, floor, versions[-1:], version))
+            if len(resp.result) != (1 if idx % 2 else 2) or any(
+                r["number_shares"] != version for r in resp.result
+            ):
+                bad.append(("torn", idx, version, resp.result))
+            versions.append(version)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader, args=(i,), daemon=True) for i in range(8)]
+    try:
+        for t in threads:
+            t.start()
+        for batch_id in (1, 2, 3):
+            commit(batch_id)
+            committed.append(batch_id)
+        deadline = time.monotonic() + 60
+        while time.monotonic() < deadline and not bad and not all(
+            served.get(i) and served[i][-1] == 3 for i in range(8)
+        ):
+            time.sleep(0.05)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not bad, bad[:3]
+    assert all(served[i][-1] == 3 for i in range(8))

@@ -151,9 +151,21 @@ def test_manifest_snapshot_isolation(spark, tmp_path):
     # old handle: still batch-0's values; fresh read: batch-1's upsert
     assert {(r.symbol, r.buys) for r in reader_view.collect()} == {("A", 1.0), ("B", 2.0)}
     assert {(r.symbol, r.buys) for r in sink.read(spark).collect()} == {("A", 5.0), ("B", 2.0)}
-    # replaying a committed batch (restart redelivery) is idempotent
+    # replaying a committed batch (restart redelivery) is a no-op: it
+    # must not rewrite files a handle of the published version reads
+    v1_view = sink.read(spark)
     sink(b1, 1)
+    assert {(r.symbol, r.buys) for r in v1_view.collect()} == {("A", 5.0), ("B", 2.0)}
     assert {(r.symbol, r.buys) for r in sink.read(spark).collect()} == {("A", 5.0), ("B", 2.0)}
+    # a fresh checkpoint restarts batch ids at 0: refuse it rather than
+    # delete data/batch-0, which the newest manifest still references
+    fresh = spark.createDataFrame([("C", 7.0, 0.0, 7)], agg_schema)
+    with pytest.raises(RuntimeError, match="checkpoint does not match"):
+        sink(fresh, 0)
+    assert {(r.symbol, r.buys) for r in sink.read(spark).collect()} == {("A", 5.0), ("B", 2.0)}
+    assert {(r.symbol, r.buys) for r in ManifestServingSink(sink.path).read(spark).collect()} == {
+        ("A", 5.0), ("B", 2.0)
+    }
 
 
 def test_emit_per_update_changelog(spark, tmp_path, txn_dir):
