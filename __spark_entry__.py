@@ -3482,9 +3482,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (inside knn_union): each branch otherwise re-scans and
         # re-repartitions the embeddings table independently and
         # carries the full scan lineage through its plan.  Values are
-        # identical; measured 7.35 → 6.45 s at sf0.1 (pre-ivfpq)
-        # (scripts/ab_s1_pinned.py).  knn_union is module-level so the
-        # plan-contract tests audit the pre-checkpoint lineage.
+        # identical; measured 7.35 → 6.45 s at sf0.1 (pre-ivfpq) by
+        # scripts/ab_s1_pinned.py, kept at commit 535f074.  knn_union
+        # is module-level so the plan-contract tests audit the
+        # pre-checkpoint lineage.
         res = knn_union(s, d)
         # 'recall_*' branches: per-query recall@10 of every approximate
         # path against the brute branch — the ANN quality claim itself

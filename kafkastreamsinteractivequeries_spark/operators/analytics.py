@@ -243,12 +243,6 @@ def purchase_click_attribution(
     )
 
 
-def purchases_with_last_click(events: DataFrame) -> DataFrame:
-    """a6: each purchase event enriched with the user's most recent
-    click at-or-before the purchase (classic event-attribution as-of)."""
-    return purchase_click_attribution(events, direction="backward")
-
-
 def revenue_rollup(
     lineitem: DataFrame,
     orders: DataFrame,

@@ -834,24 +834,6 @@ def dsir_score_with_model(
     )
 
 
-def dsir_select(
-    raw: DataFrame,
-    target: DataFrame,
-    n: int,
-    num_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The top-``n`` most target-like raw docs by DSIR weight — the
-    τ→0 deterministic limit of the paper's Gumbel-top-k resampling
-    (reproducible across engines and cluster layouts; rank on the
-    ROUNDED weight so engine-ulp noise can't reorder near-ties).
-    TakeOrderedAndProject physical form: per-partition heap top-n, one
-    bounded merge — no global sort at any scale."""
-    w = dsir_importance_weights(raw, target, num_buckets, text_col, id_col)
-    return w.orderBy(F.col("log_weight").desc(), F.col(id_col)).limit(n)
-
-
 def _classifier_features(
     docs: DataFrame,
     num_buckets: int,
@@ -1102,90 +1084,4 @@ def weighted_sample(
         .orderBy(F.col("_pri").desc(), F.col(id_col))
         .limit(n)
         .drop("_pri")
-    )
-
-
-def corpus_datasheet(
-    docs: DataFrame,
-    by: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str | None = "lang",
-) -> DataFrame:
-    """A per-stratum corpus datasheet — the summary table a "datasheets
-    for datasets" report (Gebru et al. arXiv:1803.09010) leads with,
-    assembled from the engine's verified primitives in TWO aggregation
-    passes over one corpus scan:
-
-    - volume: n_docs, total tokens, total normalized chars;
-    - quality: mean quality score in integer MICRO-units
-      (Σ floor(score·1e6) div n — deterministic under any partitioning,
-      the repo's fixed-point rule);
-    - redundancy: exact-duplicate share in permille
-      (1000·(n − distinct fingerprints) div n, the d1 fingerprint);
-    - language: dominant language and its permille share (omitted when
-      ``lang_col=None``).
-
-    Output: one row per stratum.  Scale shape: stats are inline Column
-    maps on the scan (never a join-back); the dominant language is a
-    (stratum, lang) count + ``max_by`` argmax — map-side combinable,
-    no window.  The result is a ≤|strata|-row table, broadcastable
-    into any downstream report."""
-    from kafkastreamsinteractivequeries_spark.operators.dedup import (
-        normalized_text,
-    )
-    from kafkastreamsinteractivequeries_spark.operators.text import _stats_cols
-
-    base = spread(docs).select(
-        F.col(by).alias("stratum"),
-        *([F.col(lang_col).alias("_lang")] if lang_col else []),
-        F.md5(normalized_text(F.col(text_col))).alias("_fp"),
-        *_stats_cols(text_col),
-    )
-    main = base.groupBy("stratum").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.sum("n_chars_norm").cast("long").alias("total_chars"),
-        F.sum(F.floor(F.col("quality_score") * 1_000_000))
-        .cast("long")
-        .alias("_qsum"),
-        F.countDistinct("_fp").cast("long").alias("_nfp"),
-    )
-    out = main.select(
-        "stratum",
-        "n_docs",
-        "total_tokens",
-        "total_chars",
-        F.expr("_qsum div n_docs").cast("long").alias("quality_mean_micro"),
-        F.expr("(1000 * (n_docs - _nfp)) div n_docs")
-        .cast("long")
-        .alias("dup_permille"),
-    )
-    if lang_col is None:
-        return out
-    langs = (
-        base.groupBy("stratum", "_lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .groupBy("stratum")
-        .agg(
-            F.max_by(
-                "_lang", F.struct(F.col("c"), F.col("_lang"))
-            ).alias("top_lang"),
-            F.max(F.struct(F.col("c"), F.col("_lang")))["c"].alias("_topc"),
-        )
-    )
-    return (
-        out.join(langs, "stratum", "left")
-        .select(
-            "stratum",
-            "n_docs",
-            "total_tokens",
-            "total_chars",
-            "quality_mean_micro",
-            "dup_permille",
-            "top_lang",
-            F.expr("(1000 * _topc) div n_docs")
-            .cast("long")
-            .alias("top_lang_permille"),
-        )
     )

@@ -45,8 +45,8 @@ def tokens_col(col: F.Column) -> F.Column:
 
 
 def shingles_from_tokens(toks: F.Column, n: int = 3) -> F.Column:
-    """``shingles_col`` over an ALREADY-TOKENIZED array column — the
-    shared-scan form: when several passes consume the same corpus, the
+    """Word ``n``-gram shingles of an ALREADY-TOKENIZED array column
+    (``tokens_col``) — the shared-scan form: when several passes consume the same corpus, the
     caller tokenizes once (``select(id, tokens_col(text) AS tokens)``,
     pinned) and each pass shingles from that column instead of
     re-running normalize+split per pass."""
@@ -67,16 +67,6 @@ def shingles_from_tokens(toks: F.Column, n: int = 3) -> F.Column:
     return F.when(F.size(toks) >= n, F.array_distinct(ngrams)).otherwise(
         F.array(F.array_join(toks, " "))
     )
-
-
-def shingles_col(col: F.Column, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles of the normalized text.
-
-    Pure expression: transform over an index sequence + slice/array_join
-    (codegen'd; no explode).  Documents shorter than ``n`` tokens yield
-    a single whole-document shingle so they still participate.
-    """
-    return shingles_from_tokens(tokens_col(col), n)
 
 
 # --------------------------------------------------------------------------
@@ -2207,104 +2197,6 @@ def web_link_graph(
         "dst_host",
         *(["w"] if weighted else []),
     )
-
-
-def host_stats_incremental(
-    new_docs: DataFrame,
-    landed_stats: DataFrame | None,
-    seen_pairs: DataFrame | None,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> tuple[DataFrame, DataFrame]:
-    """Batch-incremental ``host_stats`` — the daily-crawl form: merge a
-    new batch into landed per-host aggregates WITHOUT rescanning
-    history.  The mergeable state is two tables the caller persists:
-
-    - ``landed_stats``: (host, n_docs, n_urls, first_id) — the running
-      aggregates (``host_stats`` output minus the derived permille);
-    - ``seen_pairs``: (host, canonical_url) — the distinct-URL seen
-      set, the exact witness for the NON-additive n_urls count (counts
-      add, distincts don't; the skinny pair table is the same state
-      class as ``url_dedup_incremental``'s canonical set — swap in a
-      per-host HLL from ``sketches`` when approximate is acceptable).
-
-    Returns ``(stats, new_pairs)``: the UPDATED per-host stats
-    (including ``dup_permille`` recomputed from the merged totals) and
-    the batch's genuinely-new pairs — the caller appends ``new_pairs``
-    to the seen store (append-only, O(batch) per batch) and overwrites
-    ``landed_stats`` with ``stats``' first four columns.  Pass None
-    for both on the first batch.  Shuffle profile: the batch
-    aggregates touch the batch only; history joins on the skinny
-    (host, canonical) / (host) keys, never document payloads."""
-    canon = new_docs.select(
-        F.col(id_col),
-        url_host_col(F.col(url_col)).alias("host"),
-        canonicalize_url_col(F.col(url_col)).alias("canonical_url"),
-    )
-    batch_counts = canon.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("b_docs"),
-        F.min(id_col).cast("long").alias("b_first"),
-    )
-    batch_pairs = canon.select("host", "canonical_url").distinct()
-    if seen_pairs is not None:
-        new_pairs = batch_pairs.join(
-            seen_pairs.select("host", "canonical_url"),
-            ["host", "canonical_url"],
-            "left_anti",
-        )
-    else:
-        new_pairs = batch_pairs
-    new_url_counts = new_pairs.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("b_urls")
-    )
-    batch = batch_counts.join(new_url_counts, "host", "left").select(
-        "host",
-        "b_docs",
-        F.coalesce("b_urls", F.lit(0)).cast("long").alias("b_urls"),
-        "b_first",
-    )
-    if landed_stats is not None:
-        merged = batch.join(
-            landed_stats.select(
-                "host",
-                F.col("n_docs").alias("l_docs"),
-                F.col("n_urls").alias("l_urls"),
-                F.col("first_id").alias("l_first"),
-            ),
-            "host",
-            "full_outer",
-        ).select(
-            "host",
-            (F.coalesce("b_docs", F.lit(0)) + F.coalesce("l_docs", F.lit(0)))
-            .cast("long")
-            .alias("n_docs"),
-            (F.coalesce("b_urls", F.lit(0)) + F.coalesce("l_urls", F.lit(0)))
-            .cast("long")
-            .alias("n_urls"),
-            F.least(
-                F.coalesce("b_first", "l_first"),
-                F.coalesce("l_first", "b_first"),
-            )
-            .cast("long")
-            .alias("first_id"),
-        )
-    else:
-        merged = batch.select(
-            "host",
-            F.col("b_docs").alias("n_docs"),
-            F.col("b_urls").alias("n_urls"),
-            F.col("b_first").alias("first_id"),
-        )
-    stats = merged.select(
-        "host",
-        "n_docs",
-        "n_urls",
-        F.expr("(1000 * (n_docs - n_urls)) div n_docs")
-        .cast("long")
-        .alias("dup_permille"),
-        "first_id",
-    )
-    return stats, new_pairs
 
 
 def robots_rules(

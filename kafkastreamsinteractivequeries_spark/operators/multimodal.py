@@ -817,103 +817,6 @@ def with_tiff_dimensions(
     )
 
 
-def with_exif_orientation(
-    assets: DataFrame,
-    payload_col: str = "payload",
-    max_segments: int = 8,
-    max_entries: int = 16,
-) -> DataFrame:
-    """Append ``exif_orientation`` (the TIFF tag 274 SHORT, 1–8) parsed
-    from a JPEG's APP1 Exif segment — the rotation pipelines must apply
-    before any pixel work (a portrait photo stored landscape with
-    orientation 6 resizes to the wrong aspect otherwise).
-
-    Two real walks, both bounded and data-dependent: a JPEG marker walk
-    (≤ ``max_segments`` segments, each skipped by its length field)
-    finds the APP1 whose identifier is ``Exif\\0\\0``; the embedded
-    TIFF is then IFD-walked exactly like ``with_tiff_dimensions`` but
-    with every offset RELATIVE TO THE TIFF BASE (the EXIF rule — IFD
-    offsets are not file offsets).  Staged as intermediate columns per
-    the TIFF/MP3 analysis-cost lesson.  Missing APP1 / non-JPEG /
-    truncated payloads yield null."""
-    payload = F.col(payload_col)
-
-    def u8(pos) -> F.Column:
-        return _be_at(payload, pos, 1)
-
-    # marker walk: carry (pos, base); base fixes once found
-    nul = F.lit(None).cast("bigint")
-    init = F.struct(F.lit(3).cast("bigint").alias("pos"), nul.alias("base"))
-
-    def seg_step(acc: F.Column, _i: F.Column) -> F.Column:
-        pos = acc["pos"]
-        marker = u8(pos + 1)
-        seglen = _be_at(payload, pos + 2, 2)
-        is_app1_exif = (
-            (u8(pos) == 255)
-            & (marker == 0xE1)
-            & (F.hex(F.substring(payload, pos + 4, 6)) == "457869660000")
-        )
-        found = F.coalesce(
-            acc["base"], F.when(is_app1_exif, pos + 10)
-        )
-        nxt = F.when(
-            acc["base"].isNotNull() | (u8(pos) != 255) | seglen.isNull(),
-            pos,
-        ).otherwise(pos + 2 + seglen)
-        return F.struct(nxt.alias("pos"), found.alias("base"))
-
-    walked = F.aggregate(
-        F.when(
-            F.hex(F.substring(payload, 1, 2)) == "FFD8",
-            F.sequence(F.lit(1), F.lit(max_segments)),
-        ).otherwise(F.array().cast("array<int>")),
-        init,
-        seg_step,
-    )
-    s1 = assets.select("*", walked["base"].alias("_xbase"))
-    base = F.col("_xbase")
-    le0 = F.hex(F.substring(payload, base, 2)) == "4949"
-    be0 = F.hex(F.substring(payload, base, 2)) == "4D4D"
-    s2 = s1.select(
-        "*",
-        le0.alias("_xle"),
-        (
-            base.isNotNull()
-            & (le0 | be0)
-            & (_uint_at(payload, base + 2, 2, le0) == 42)
-        ).alias("_xok"),
-        # EXIF rule: the IFD offset is relative to the TIFF base
-        (base + _uint_at(payload, base + 4, 4, le0)).alias("_xifd"),
-    )
-    le, ok, ifd = F.col("_xle"), F.col("_xok"), F.col("_xifd")
-    s3 = s2.select(
-        "*",
-        F.least(_uint_at(payload, ifd, 2, le), F.lit(max_entries)).alias("_xn"),
-    )
-    n = F.col("_xn")
-
-    def ifd_step(acc: F.Column, i: F.Column) -> F.Column:
-        entry = ifd + 2 + i.cast("bigint") * 12
-        tag = _uint_at(payload, entry, 2, le)
-        typ = _uint_at(payload, entry + 2, 2, le)
-        val = F.when(typ == 3, _uint_at(payload, entry + 8, 2, le))
-        return F.coalesce(acc, F.when(tag == 274, val))
-
-    orientation = F.aggregate(
-        F.when(ok & n.isNotNull() & (n > 0), F.sequence(F.lit(0), n - 1))
-        .otherwise(F.array().cast("array<int>")),
-        nul,
-        ifd_step,
-    )
-    return s3.select(
-        *assets.columns,
-        F.when(
-            orientation.between(1, 8), orientation
-        ).alias("exif_orientation"),
-    )
-
-
 def webp_tiff_manifest(webp_assets: DataFrame, tiff_assets: DataFrame) -> DataFrame:
     """Manifest rows for the RIFF-image and endian-tagged formats,
     shaped like ``gif_bmp_manifest``: media type from the PARSE
@@ -2054,103 +1957,6 @@ def wav_goertzel_band_energy(
     return spread(assets).select("asset_id", "payload").mapInPandas(extract, schema)
 
 
-def wav_energy_segments(
-    assets: DataFrame,
-    window_frames: int = 256,
-    threshold: int = 1_000_000,
-) -> DataFrame:
-    """Energy-based audio segmentation (the silence-trim / VAD-prep
-    step speech-corpus pipelines run before transcription): decode
-    PCM-16, window into ``window_frames``-frame blocks, compute each
-    window's EXACT-INTEGER energy ``Σv²  div n`` (per-sample mean
-    square — deterministic, no floats), mark windows ≥ ``threshold``
-    active, and merge consecutive active windows into segments.
-
-    Output: one row per ACTIVE segment — (asset_id, seg_idx,
-    start_frame, end_frame, n_windows, energy) with ``energy`` the
-    integer mean of the member windows' energies and ``end_frame``
-    exclusive; fully silent assets emit no rows.
-
-    Scale shape: one Arrow ``mapInPandas`` decode pass (the m6/m7/m8
-    codec-stage envelope) — per-asset linear work, zero shuffle, zero
-    join.  Corrupt payloads degrade to no rows."""
-    import numpy as np
-
-    from kafkastreamsinteractivequeries_spark.functions.codecs import decode_wav
-
-    schema = (
-        "asset_id long, seg_idx int, start_frame int, end_frame int, "
-        "n_windows int, energy long"
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                try:
-                    _rate, ch, samples = decode_wav(bytes(payload))
-                except Exception:
-                    continue
-                v = samples.astype("int64")
-                n_frames = v.size // ch
-                seg_idx = 0
-                cur = None  # (start_window, [energies])
-                n_windows = (n_frames + window_frames - 1) // window_frames
-                for wi in range(n_windows):
-                    lo = wi * window_frames * ch
-                    hi = min((wi + 1) * window_frames, n_frames) * ch
-                    blk = v[lo:hi]
-                    energy = int((blk * blk).sum()) // blk.size
-                    if energy >= threshold:
-                        if cur is None:
-                            cur = (wi, [])
-                        cur[1].append(energy)
-                    elif cur is not None:
-                        s, es = cur
-                        rows.append(
-                            {
-                                "asset_id": asset_id,
-                                "seg_idx": seg_idx,
-                                "start_frame": s * window_frames,
-                                "end_frame": min(
-                                    (s + len(es)) * window_frames, n_frames
-                                ),
-                                "n_windows": len(es),
-                                "energy": sum(es) // len(es),
-                            }
-                        )
-                        seg_idx += 1
-                        cur = None
-                if cur is not None:
-                    s, es = cur
-                    rows.append(
-                        {
-                            "asset_id": asset_id,
-                            "seg_idx": seg_idx,
-                            "start_frame": s * window_frames,
-                            "end_frame": min(
-                                (s + len(es)) * window_frames, n_frames
-                            ),
-                            "n_windows": len(es),
-                            "energy": sum(es) // len(es),
-                        }
-                    )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {
-                    "asset_id": pd.Series(dtype="int64"),
-                    "seg_idx": pd.Series(dtype="int32"),
-                    "start_frame": pd.Series(dtype="int32"),
-                    "end_frame": pd.Series(dtype="int32"),
-                    "n_windows": pd.Series(dtype="int32"),
-                    "energy": pd.Series(dtype="int64"),
-                }
-            )
-
-    return spread(assets).select("asset_id", "payload").mapInPandas(extract, schema)
-
-
 def video_frame_features(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Per-frame Python feature extraction: the full decode chain —
     frame-sampling plan (JVM ``sequence``/``posexplode``) ⋈ payload,
@@ -2499,61 +2305,3 @@ def image_pair_quality_gates(
         mask.cast("int").alias("failure_mask"),
         (mask == 0).alias("passed"),
     )
-
-
-def caption_reuse_stats(
-    pairs: DataFrame,
-    payload_col: str = "payload",
-    caption_col: str = "caption",
-    id_col: str = "pair_id",
-) -> DataFrame:
-    """The two reuse profiles a web-scraped image-text corpus needs
-    before training: per distinct IMAGE (dhash), how many distinct
-    captions it carries (alt-text churn — high counts mean noisy
-    supervision), and per distinct CAPTION, how many distinct images
-    it labels (stock-photo boilerplate like 'image may contain...' —
-    LAION-class pipelines drop captions above a reuse cap).  Output:
-    one row per (kind, key): kind ∈ ('image', 'caption'),
-    n_partners = the distinct-count, n_pairs = total pairs carrying
-    the key, first_id.  Two count-distinct aggregates over the same
-    skinny (dhash, caption_fp, id) table — each plans as the
-    two-phase expand, no hot-key funnel."""
-    from kafkastreamsinteractivequeries_spark.operators.dedup import (
-        normalized_text,
-    )
-
-    hashes = image_dhash(
-        pairs.select(F.col(id_col).alias("asset_id"), F.col(payload_col))
-    ).select(F.col("asset_id").alias(id_col), "dhash")
-    base = hashes.join(
-        pairs.select(
-            F.col(id_col),
-            F.md5(
-                normalized_text(F.coalesce(F.col(caption_col), F.lit("")))
-            ).alias("caption_fp"),
-        ),
-        id_col,
-    )
-    img = base.groupBy("dhash").agg(
-        F.countDistinct("caption_fp").cast("long").alias("n_partners"),
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.min(id_col).cast("long").alias("first_id"),
-    ).select(
-        F.lit("image").alias("kind"),
-        F.col("dhash").alias("key"),
-        "n_partners",
-        "n_pairs",
-        "first_id",
-    )
-    cap = base.groupBy("caption_fp").agg(
-        F.countDistinct("dhash").cast("long").alias("n_partners"),
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.min(id_col).cast("long").alias("first_id"),
-    ).select(
-        F.lit("caption").alias("kind"),
-        F.col("caption_fp").alias("key"),
-        "n_partners",
-        "n_pairs",
-        "first_id",
-    )
-    return img.unionByName(cap)

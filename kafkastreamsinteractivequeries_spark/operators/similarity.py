@@ -1759,28 +1759,6 @@ def append_pq_codes(
     return existing.unionByName(fresh)
 
 
-def append_ivfpq_codes(
-    existing: DataFrame,
-    new_embeddings: DataFrame,
-    centroids: DataFrame,
-    codebook: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """``append_pq_codes`` for the IVF-PQ residual code store
-    (``ivfpq_codes``): coarse assignment + residual codes for the new
-    batch only, against the frozen coarse quantizer AND codebook, then
-    union with the landed (id, list_id, sub_id, code) table.  Same
-    frozen-quantizer append == one-shot contract; same
-    never-touch-the-store scale shape."""
-    fresh = ivfpq_codes(
-        new_embeddings, centroids, codebook, m, dim, vec_col, id_col
-    )
-    return existing.unionByName(fresh)
-
-
 def knn_ivfpq(
     embeddings: DataFrame,
     queries: DataFrame,

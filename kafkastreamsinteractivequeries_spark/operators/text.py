@@ -2697,99 +2697,3 @@ def tokenizer_fertility(
             ).cast("long").alias("unk_permille"),
         )
     )
-
-
-def decode_crawl_bytes(
-    pages: DataFrame,
-    body_col: str = "body",
-    id_col: str = "doc_id",
-    declared_col: str | None = None,
-) -> DataFrame:
-    """Crawled bytes → text: the decode step between a WARC record and
-    every text operator.  Real crawls are NOT all UTF-8; the detection
-    ladder is the practical one (WHATWG encoding sniffing, reduced to
-    its deterministic core):
-
-    1. BOM (UTF-8 / UTF-16 LE / UTF-16 BE) — authoritative;
-    2. ``<meta charset=…>`` / ``http-equiv`` content-type charset in
-       the first 1024 bytes (probed via latin-1, which never fails);
-    3. the HTTP-declared charset (``declared_col``, e.g. parsed from
-       the WARC ``http_content_type``), if any;
-    4. UTF-8 with replacement — never an error, the degrade rule.
-
-    latin-1/iso-8859-1 decode as windows-1252 (the WHATWG superset
-    rule: real pages labeled latin-1 use 0x80–0x9F as cp1252).  One
-    Arrow ``mapInPandas`` pass (dynamic charsets aren't expressible as
-    a Column ``decode``, whose charset is a literal — and Spark's
-    ``decode`` throws on invalid bytes anyway).  Output: (id, text,
-    charset) where charset is the one actually used."""
-    import codecs
-
-    # Derive the id type from the input (the wordpiece_segment_arrow
-    # convention) — hardcoding `long` breaks string/int doc ids.
-    id_type = dict(pages.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, text string, charset string"
-    alias = {
-        "latin-1": "cp1252", "latin1": "cp1252", "iso-8859-1": "cp1252",
-        "windows-1252": "cp1252", "us-ascii": "cp1252",
-    }
-
-    def norm_charset(name: str) -> str | None:
-        name = name.strip().strip("\"'").lower()
-        name = alias.get(name, name)
-        try:
-            codecs.lookup(name)
-        except LookupError:
-            return None
-        return name
-
-    import re as _re
-
-    meta_re = _re.compile(
-        rb"""(?is)<meta[^>]+charset\s*=\s*["']?\s*([A-Za-z0-9_.:-]+)"""
-    )
-
-    def decode_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, texts, charsets = [], [], []
-            declared = (
-                pdf[declared_col]
-                if declared_col is not None
-                else [None] * len(pdf)
-            )
-            for rid, body, decl in zip(pdf[id_col], pdf[body_col], declared):
-                ids.append(rid)
-                if body is None:
-                    texts.append(None)
-                    charsets.append(None)
-                    continue
-                data = bytes(body)
-                cs = None
-                if data[:3] == b"\xef\xbb\xbf":
-                    cs, data = "utf-8", data[3:]
-                elif data[:2] == b"\xff\xfe":
-                    cs, data = "utf-16-le", data[2:]
-                elif data[:2] == b"\xfe\xff":
-                    cs, data = "utf-16-be", data[2:]
-                if cs is None:
-                    m = meta_re.search(data[:1024])
-                    if m:
-                        cs = norm_charset(m.group(1).decode("latin-1"))
-                if cs is None and decl:
-                    cs = norm_charset(str(decl))
-                if cs is None:
-                    cs = "utf-8"
-                texts.append(data.decode(cs, errors="replace"))
-                charsets.append(cs)
-            yield pd.DataFrame(
-                {id_col: ids, "text": texts, "charset": charsets}
-            )
-
-    from kafkastreamsinteractivequeries_spark.sources.tables import spread
-
-    cols = [id_col, body_col] + (
-        [declared_col] if declared_col is not None else []
-    )
-    return spread(pages).select(*cols).mapInPandas(decode_batches, schema)

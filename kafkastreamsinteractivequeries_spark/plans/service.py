@@ -32,12 +32,12 @@ class InteractiveQueryService:
         self.store_name = store_name
 
     def execute(self, query: Query) -> DataFrame:
-        return query.apply(self.serving_df, key_col=self.key_col)
+        return self._execute_with_info(query)[0]
 
     def _execute_with_info(self, query: Query) -> tuple[DataFrame, list[str]]:
-        """``execute`` plus the ``executionInfo`` lines that name what
-        the frame reads (subclasses add the snapshot they resolved)."""
-        return self.execute(query), []
+        """The query's frame plus the ``executionInfo`` lines that name
+        what it reads (subclasses add the snapshot they resolved)."""
+        return query.apply(self.serving_df, key_col=self.key_col), []
 
     #: default collect cap for ``execute_response`` — matches the REST
     #: layer's cap; an unlimited default is a driver-OOM invitation at
@@ -141,18 +141,6 @@ class LiveSnapshotQueryService(InteractiveQueryService):
         self._spark = spark
         self._sink = sink
         super().__init__(serving_df=None, key_col=key_col, store_name=store_name)
-
-    @property
-    def serving_df(self) -> DataFrame:
-        return self._sink.read(self._spark)
-
-    @serving_df.setter
-    def serving_df(self, _df) -> None:
-        # the base __init__ assigns a placeholder; live reads win
-        pass
-
-    def execute(self, query: Query) -> DataFrame:
-        return self._execute_with_info(query)[0]
 
     def _execute_with_info(self, query: Query) -> tuple[DataFrame, list[str]]:
         version = self._sink.latest_version(self._spark)

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from kafkastreamsinteractivequeries_spark.plans.queries import (
     FilteredRangeQuery,
@@ -236,12 +236,12 @@ def create_app(
             # exact reference parity: toPositive(murmur2(key)) % n
             p = partitioning.partition_for_key(key, n)
         elif scheme == "spark":
-            spark = service.serving_df.sparkSession
-            p = spark.range(1).select(
+            p = SparkSession.active().range(1).select(
                 F.pmod(F.hash(F.lit(key)), F.lit(n)).alias("partition")
             ).collect()[0]["partition"]
         else:
-            return jsonify({"error": f"unknown scheme {scheme!r}"}), 400
+            return jsonify(_envelope(QueryResponse.with_error(
+                f"unknown scheme {scheme!r}; use kafka or spark"))), 400
         return jsonify(
             {"key": key, "numPartitions": n, "scheme": scheme, "partition": int(p)}
         )

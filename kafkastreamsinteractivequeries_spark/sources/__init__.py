@@ -1,3 +1,3 @@
-from kafkastreamsinteractivequeries_spark.sources.tables import load_table, load_tables, transactions_from_events
+from kafkastreamsinteractivequeries_spark.sources.tables import load_table, transactions_from_events
 
-__all__ = ["load_table", "load_tables", "transactions_from_events"]
+__all__ = ["load_table", "transactions_from_events"]

@@ -20,9 +20,10 @@ exactly what the reference does whenever its cache is non-zero
 
 The serving table (the reference's interactive-query store) is
 maintained by a ``foreachBatch`` upsert: each micro-batch's updated
-keys overwrite their partitions in a symbol-partitioned parquet table
-(dynamic partition overwrite — the Delta-less MERGE).  Readers get the
-latest aggregate per key; ``InteractiveQueryService`` points at it.
+keys land in a fresh directory and a manifest commit publishes the new
+snapshot (``ManifestServingSink`` — the Delta-less MERGE).  Readers get
+the latest committed aggregate per key through ``ManifestServingSink.read``
+or ``LiveSnapshotQueryService``.
 """
 
 from __future__ import annotations
@@ -100,40 +101,43 @@ def streaming_aggregation(txn_stream: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-class ParquetServingSink:
-    """foreachBatch upsert into a symbol-partitioned parquet serving
-    table (the reference's materialized queryable store, T6).
+def _fs(spark: SparkSession, path: str):
+    """Hadoop FileSystem of ``path`` (portable across local/HDFS) and the
+    session's JVM view."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
-    Each micro-batch of ``outputMode("update")`` rows contains the new
-    aggregate value for every key updated in that batch; writing with
-    dynamic partition overwrite replaces exactly those keys' partitions.
-    Scale: per-batch work is proportional to updated keys, not table
-    size; reads prune by symbol partition.
-    """
 
-    def __init__(self, path: str):
-        self.path = path
+def _committed_subdirs(spark: SparkSession, root: str, prefix: str) -> list[str]:
+    """Names of ``root``'s child directories that start with ``prefix``
+    and carry parquet's ``_SUCCESS`` commit marker, in name order: one
+    glob instead of one ``exists`` per directory."""
+    fs, jvm = _fs(spark, root)
+    found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{root}/{prefix}*/_SUCCESS"))
+    return sorted(st.getPath().getParent().getName() for st in found or [])
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.columns:
-            return
-        # per-write option, not the session conf: concurrent queries on
-        # the shared session must never observe a temporary 'dynamic'
-        (
-            batch_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("symbol")
-            .parquet(self.path)
+
+def _refuse_foreign_checkpoint(store: str, committed: str, newest: int | None, batch_id: int) -> None:
+    """A committed version STRICTLY ABOVE the incoming batch id means
+    the query's checkpoint and the store's id space do not match (a
+    fresh checkpoint restarts batch ids at 0; a genuine replay reuses
+    its own id), so fail loudly instead of overwriting or ignoring the
+    landed history."""
+    if newest is not None and newest > batch_id:
+        raise RuntimeError(
+            f"{store} already has committed {committed} v{newest} > incoming "
+            f"micro-batch id {batch_id}: the query's checkpoint does not "
+            "match this store (fresh checkpoint against an existing store?). "
+            "Restore the original checkpoint or point the query at a new "
+            "store path."
         )
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
 
 
 class ManifestServingSink:
     """Transactional foreachBatch upsert: immutable per-batch data files
     committed by an append-only manifest log (a minimal table format,
-    the Delta-less ACID variant of ``ParquetServingSink``).
+    the Delta-less ACID upsert).  Read the store only through ``read``.
 
     Why: plain dynamic partition overwrite deletes-then-writes partition
     directories in place, so a concurrent reader can observe a key's
@@ -191,21 +195,13 @@ class ManifestServingSink:
         # pays one round trip per package segment of a class lookup
         self._jvm_refs = None
 
-    # -- hadoop FS helpers (portable across local/HDFS paths) --------------
-
-    @staticmethod
-    def _fs(spark: SparkSession, path: str):
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
     def _manifest_dir(self) -> str:
         return f"{self.path}/manifest"
 
     def _refs(self, spark: SparkSession):
         refs = self._jvm_refs
         if refs is None or refs[0] is not spark:
-            fs, jvm = self._fs(spark, self.path)
+            fs, jvm = _fs(spark, self.path)
             refs = self._jvm_refs = (
                 spark,
                 fs,
@@ -226,7 +222,7 @@ class ManifestServingSink:
 
     def _manifest(self, spark: SparkSession, version: int) -> dict[str, str]:
         path = f"{self._manifest_dir()}/v{version:020d}.json"
-        fs, jvm = self._fs(spark, path)
+        fs, jvm = _fs(spark, path)
         stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
         try:
             data = bytes(
@@ -245,14 +241,7 @@ class ManifestServingSink:
             return
         spark = batch_df.sparkSession
         newest = self.latest_version(spark)
-        if newest is not None and newest > batch_id:
-            raise RuntimeError(
-                f"serving store {self.path} already has committed manifest "
-                f"v{newest} > incoming micro-batch id {batch_id}: the query's "
-                "checkpoint does not match this store (fresh checkpoint "
-                "against an existing store?). Restore the original "
-                "checkpoint or point the query at a new store path."
-            )
+        _refuse_foreign_checkpoint(f"serving store {self.path}", "manifest", newest, batch_id)
         if newest == batch_id:
             return  # committed replay: its snapshot is already published
         out = f"{self.path}/data/batch-{batch_id}"
@@ -264,7 +253,7 @@ class ManifestServingSink:
             .partitionBy("_bucket")
             .parquet(out)
         )
-        fs, jvm = self._fs(spark, out)
+        fs, jvm = _fs(spark, out)
         written = {
             st.getPath().getName().split("=", 1)[1]: f"{out}/{st.getPath().getName()}"
             for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(out))
@@ -337,7 +326,7 @@ class ManifestServingSink:
         snapshot = self._latest_manifest(spark)
         live = {d.rsplit("/_bucket=", 1)[0] for d in snapshot.values()}
         data_dir = f"{self.path}/data"
-        fs, jvm = self._fs(spark, data_dir)
+        fs, jvm = _fs(spark, data_dir)
         root = jvm.org.apache.hadoop.fs.Path(data_dir)
         deleted = []
         if not fs.exists(root):
@@ -348,21 +337,6 @@ class ManifestServingSink:
                 fs.delete(st.getPath(), True)
                 deleted.append(p)
         return deleted
-
-
-def start_serving_pipeline(
-    txn_stream: DataFrame,
-    serving_path: str,
-    checkpoint_path: str,
-) -> StreamingQuery:
-    """T4+T5+T6: standing aggregate → upserted parquet serving table."""
-    agg = streaming_aggregation(txn_stream)
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(ParquetServingSink(serving_path))
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
 
 
 def start_transactional_serving_pipeline(
@@ -444,15 +418,21 @@ def stateful_transaction_aggregate(txn_stream: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def to_kafka_changelog(agg_stream: DataFrame, bootstrap_servers: str, topic: str = "output"):
-    """T7: re-emit each aggregate update as (key=symbol, value=JSON) —
-    ``.toStream().to(outputTopic)`` (``streams/KafkaStreamsService.java:91-93``)."""
-    payload = agg_stream.select(
+def _changelog_records(agg_stream: DataFrame) -> DataFrame:
+    """T7 record shape: one (key=symbol, value=JSON aggregate) row per
+    aggregate update — what the reference writes to its ``output`` topic
+    (``streams/KafkaStreamsService.java:91-93``)."""
+    return agg_stream.select(
         F.col("symbol").alias("key"),
         F.to_json(F.struct("symbol", "buys", "sells", "number_shares")).alias("value"),
     )
+
+
+def to_kafka_changelog(agg_stream: DataFrame, bootstrap_servers: str, topic: str = "output"):
+    """T7: re-emit each aggregate update to Kafka —
+    ``.toStream().to(outputTopic)``.  Returns the unstarted writer."""
     return (
-        payload.writeStream.format("kafka")
+        _changelog_records(agg_stream).writeStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
         .outputMode("update")
@@ -460,13 +440,11 @@ def to_kafka_changelog(agg_stream: DataFrame, bootstrap_servers: str, topic: str
 
 
 def memory_changelog(agg_stream: DataFrame, query_name: str) -> StreamingQuery:
-    """Test analog of T7: update-mode memory sink, one row per emitted
-    aggregate update (the reference's `output` topic contents)."""
+    """Test analog of T7: update-mode memory sink holding the same
+    (key, value) records ``to_kafka_changelog`` writes, one row per
+    emitted aggregate update (the reference's `output` topic contents)."""
     return (
-        agg_stream.select(
-            "symbol",
-            F.to_json(F.struct("symbol", "buys", "sells", "number_shares")).alias("value"),
-        )
+        _changelog_records(agg_stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName(query_name)
@@ -726,8 +704,9 @@ def streaming_curation(
       streaming form — run them as periodic batch compaction over the
       landed output, the standard lambda-style split.
 
-    Sink via ``foreachBatch`` + ``ParquetServingSink`` (or any writer);
-    the output schema is the input plus (quality_score, n_tokens).
+    Land it with any append writer (a parquet file sink or
+    ``foreachBatch``); the output schema is the input plus
+    (quality_score, n_tokens).
     """
     from kafkastreamsinteractivequeries_spark.operators.text import (
         _stats_cols,
@@ -781,63 +760,43 @@ class _VersionedSketchSink:
     def _merge(self, a: DataFrame, b: DataFrame) -> DataFrame:
         raise NotImplementedError
 
-    def _current_version(
-        self, spark: SparkSession, below: int | None = None
-    ) -> str | None:
-        """Highest committed (``_SUCCESS``-marked) version directory,
-        optionally restricted to ids strictly below ``below``."""
-        fs, jvm = ManifestServingSink._fs(spark, self.path)
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        if not fs.exists(root):
-            return None
-        best: tuple[int, str] | None = None
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if not (status.isDirectory() and name.startswith("v")):
-                continue
+    def _versions(self, spark: SparkSession) -> dict[int, str]:
+        """{version id: directory name} of the committed snapshots."""
+        out = {}
+        for name in _committed_subdirs(spark, self.path, "v"):
             try:
-                vid = int(name[1:])
+                out[int(name[1:])] = name
             except ValueError:
                 continue
-            if below is not None and vid >= below:
-                continue
-            marker = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{name}/_SUCCESS")
-            if fs.exists(marker) and (best is None or vid > best[0]):
-                best = (vid, name)
-        return best[1] if best else None
+        return out
+
+    def _guarded_base(self, spark: SparkSession, store: str, batch_id: int) -> str | None:
+        """Snapshot a batch merges onto: the newest committed version
+        strictly below ``batch_id``, after refusing a store whose newest
+        version is above it.  Without that guard a FRESH checkpoint
+        (batch ids restart at 0) would overwrite the old v0, merge onto
+        nothing and leave readers on the stale high-numbered snapshot —
+        silent data loss with no error."""
+        versions = self._versions(spark)
+        _refuse_foreign_checkpoint(
+            f"{store} {self.path}", "snapshot", max(versions, default=None), batch_id
+        )
+        ids = [v for v in versions if v < batch_id]
+        return versions[max(ids)] if ids else None
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Guard against a FRESH checkpoint pointed at an existing store:
-        # batch ids restart at 0, so without this check batch 0 would
-        # overwrite the old v0, merges would silently ignore all landed
-        # history (below=0 matches nothing), and readers would keep
-        # resolving the stale old high-numbered snapshot — silent data
-        # loss with no error.  A committed version STRICTLY ABOVE this
-        # batch id can only mean id-space mismatch (a genuine replay
-        # rewrites its own id; ids within one checkpoint are monotonic),
-        # so fail loudly and tell the operator to keep the checkpoint
-        # and the store paired, or start a fresh store path.
-        newest = self._current_version(spark)
-        if newest is not None and int(newest[1:]) > batch_id:
-            raise RuntimeError(
-                f"sketch store {self.path} already has committed snapshot "
-                f"{newest} > incoming micro-batch id {batch_id}: the query's "
-                "checkpoint does not match this store (fresh checkpoint "
-                "against an existing store?). Restore the original "
-                "checkpoint or point the query at a new store path."
-            )
+        cur = self._guarded_base(spark, "sketch store", batch_id)
         sketch = self._sketch(batch_df)
-        cur = self._current_version(spark, below=batch_id)
         if cur is not None:
             sketch = self._merge(spark.read.parquet(f"{self.path}/{cur}"), sketch)
         sketch.write.mode("overwrite").parquet(f"{self.path}/v{batch_id}")
 
     def _latest(self, spark: SparkSession) -> DataFrame:
-        cur = self._current_version(spark)
-        if cur is None:
+        versions = self._versions(spark)
+        if not versions:
             raise FileNotFoundError(f"no committed sketch snapshot under {self.path}")
-        return spark.read.parquet(f"{self.path}/{cur}")
+        return spark.read.parquet(f"{self.path}/{versions[max(versions)]}")
 
     def vacuum(self, spark: SparkSession, keep_last: int = 2) -> int:
         """Delete committed snapshot directories older than the newest
@@ -846,23 +805,11 @@ class _VersionedSketchSink:
         the number of directories removed."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        fs, jvm = ManifestServingSink._fs(spark, self.path)
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        if not fs.exists(root):
-            return 0
-        committed: list[int] = []
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if status.isDirectory() and name.startswith("v"):
-                try:
-                    vid = int(name[1:])
-                except ValueError:
-                    continue
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{self.path}/{name}/_SUCCESS")):
-                    committed.append(vid)
-        doomed = sorted(committed)[:-keep_last]
+        versions = self._versions(spark)
+        doomed = sorted(versions)[:-keep_last]
+        fs, jvm = _fs(spark, self.path)
         for vid in doomed:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{self.path}/v{vid}"), True)
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{self.path}/{versions[vid]}"), True)
         return len(doomed)
 
 
@@ -905,21 +852,7 @@ class _AppendOnlyCodeSink:
         )
 
     def _committed_dirs(self, spark: SparkSession) -> list[str]:
-        fs, jvm = ManifestServingSink._fs(spark, self.path)
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        if not fs.exists(root):
-            return []
-        out = []
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if not (status.isDirectory() and name.startswith("batch=")):
-                continue
-            marker = jvm.org.apache.hadoop.fs.Path(
-                f"{self.path}/{name}/_SUCCESS"
-            )
-            if fs.exists(marker):
-                out.append(f"{self.path}/{name}")
-        return sorted(out)
+        return [f"{self.path}/{name}" for name in _committed_subdirs(spark, self.path, "batch=")]
 
     def codes(self, spark: SparkSession) -> DataFrame:
         """The landed code table — the union of every committed batch
@@ -962,7 +895,7 @@ class _AppendOnlyCodeSink:
             return 0  # nothing to fold
         target = doomed[-1]
         stage = f"{target}~compact"
-        fs, jvm = ManifestServingSink._fs(spark, self.path)
+        fs, jvm = _fs(spark, self.path)
         hpath = jvm.org.apache.hadoop.fs.Path
         spark.read.parquet(*doomed).coalesce(
             max(1, spark.sparkContext.defaultParallelism // 4)
@@ -1472,15 +1405,7 @@ class StreamingNearDupFilter(_VersionedSketchSink):
         )
 
         spark = batch_df.sparkSession
-        newest = self._current_version(spark)
-        if newest is not None and int(newest[1:]) > batch_id:
-            raise RuntimeError(
-                f"near-dup store {self.path} already has committed snapshot "
-                f"{newest} > incoming micro-batch id {batch_id}: the query's "
-                "checkpoint does not match this store (fresh checkpoint "
-                "against an existing store?). Restore the original "
-                "checkpoint or point the query at a new store path."
-            )
+        cur = self._guarded_base(spark, "near-dup store", batch_id)
         # signatures pinned once: read by the intra-batch pair join
         # (twice), the landed probe, and the store append
         sigs = (
@@ -1518,7 +1443,6 @@ class StreamingNearDupFilter(_VersionedSketchSink):
             .select(F.col("_idb").alias(self.id_col))
             .distinct()
         )
-        cur = self._current_version(spark, below=batch_id)
         if cur is not None:
             landed = spark.read.parquet(f"{self.path}/{cur}")
             cross = (
@@ -1547,22 +1471,7 @@ class StreamingNearDupFilter(_VersionedSketchSink):
     def survivors(self, spark: SparkSession) -> DataFrame:
         """Everything kept so far: the union of committed per-batch
         survivor directories."""
-        fs, jvm = ManifestServingSink._fs(spark, self.out_path)
-        root = jvm.org.apache.hadoop.fs.Path(self.out_path)
-        dirs = []
-        if fs.exists(root):
-            for status in fs.listStatus(root):
-                name = status.getPath().getName()
-                if (
-                    status.isDirectory()
-                    and name.startswith("b")
-                    and fs.exists(
-                        jvm.org.apache.hadoop.fs.Path(
-                            f"{self.out_path}/{name}/_SUCCESS"
-                        )
-                    )
-                ):
-                    dirs.append(f"{self.out_path}/{name}")
+        dirs = [f"{self.out_path}/{name}" for name in _committed_subdirs(spark, self.out_path, "b")]
         if not dirs:
             raise FileNotFoundError(f"no committed survivor batches under {self.out_path}")
         return spark.read.parquet(*dirs)

@@ -267,7 +267,6 @@ def test_dsir_weights_favor_target_like_docs(spark):
     # profile must outscore docs that don't.
     from kafkastreamsinteractivequeries_spark.operators.curation import (
         dsir_importance_weights,
-        dsir_select,
     )
 
     target = spark.createDataFrame(
@@ -284,8 +283,6 @@ def test_dsir_weights_favor_target_like_docs(spark):
     )
     w = {r.doc_id: r.log_weight for r in dsir_importance_weights(raw, target).collect()}
     assert w[0] > w[1] and w[2] > w[1]
-    sel = [r.doc_id for r in dsir_select(raw, target, 2).collect()]
-    assert set(sel) == {0, 2}
 
 
 def test_dsir_target_ids_fused_pass_matches_two_pass(spark):
@@ -731,34 +728,3 @@ def test_curate_documents_web_stages(spark):
         pass
     else:
         raise AssertionError("expected ValueError without url_col")
-
-
-def test_corpus_datasheet(spark):
-    """Datasheet aggregates per stratum: volumes, fixed-point quality
-    mean, exact-dup permille, dominant language + share."""
-    from kafkastreamsinteractivequeries_spark.operators.curation import (
-        corpus_datasheet,
-    )
-
-    good = "the quick brown fox jumps over the lazy dog again and again "
-    rows = [
-        (1, good * 2, "en", "web"),
-        (2, good * 2, "en", "web"),          # exact dup of 1
-        (3, good + "unique tail", "en", "web"),
-        (4, good + "otra cosa distinta", "es", "web"),
-        (5, good, "en", "books"),
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    )
-    out = {r["stratum"]: r for r in corpus_datasheet(docs).collect()}
-    web, books = out["web"], out["books"]
-    assert web["n_docs"] == 4 and books["n_docs"] == 1
-    assert web["dup_permille"] == 1000 * (4 - 3) // 4  # one collapsed pair
-    assert books["dup_permille"] == 0
-    assert web["top_lang"] == "en" and web["top_lang_permille"] == 750
-    assert web["total_tokens"] > 0 and web["quality_mean_micro"] > 0
-
-    # lang_col=None drops the language columns
-    slim = corpus_datasheet(docs, lang_col=None)
-    assert "top_lang" not in slim.columns

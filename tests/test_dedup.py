@@ -1002,40 +1002,6 @@ def test_robots_wildcard_rules(spark):
     assert got["/underXscore/y"] == 1
 
 
-def test_host_stats_incremental_equals_one_shot(spark):
-    """Two half-batches merged through the landed-stats + seen-pairs
-    state equal one-shot host_stats row-for-row (the mergeable-state
-    contract), and new_pairs really is only the unseen set."""
-    from kafkastreamsinteractivequeries_spark.operators.dedup import (
-        host_stats,
-        host_stats_incremental,
-    )
-
-    rows = [
-        (i, f"https://h{i % 3}.com/p{i % 4}?utm_source=x&a={i % 2}")
-        for i in range(24)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, url string")
-    half1 = docs.filter("doc_id < 12")
-    half2 = docs.filter("doc_id >= 12")
-
-    s1, p1 = host_stats_incremental(half1, None, None)
-    s1 = s1.localCheckpoint()
-    p1 = p1.localCheckpoint()
-    s2, p2 = host_stats_incremental(half2, s1.select(
-        "host", "n_docs", "n_urls", "first_id"
-    ), p1)
-
-    got = {r["host"]: r for r in s2.collect()}
-    want = {r["host"]: r for r in host_stats(docs).collect()}
-    assert set(got) == set(want)
-    for h in want:
-        for c in ("n_docs", "n_urls", "dup_permille", "first_id"):
-            assert got[h][c] == want[h][c], (h, c, got[h][c], want[h][c])
-    # second batch added no new canonical URLs (same residue formulas)
-    assert p2.count() == 0
-
-
 @pytest.mark.slow  # >10 s; runs in the full suite
 def test_extract_resolve_and_link_graph(spark):
     """Href extraction, RFC 3986 reference resolution, and the

@@ -25,8 +25,9 @@ from kafkastreamsinteractivequeries_spark.plans.service import InteractiveQueryS
 from kafkastreamsinteractivequeries_spark.schemas import STOCK_TRANSACTION_SCHEMA
 from kafkastreamsinteractivequeries_spark.serving.rest import create_app
 from kafkastreamsinteractivequeries_spark.streaming.pipeline import (
+    ManifestServingSink,
     file_transaction_stream,
-    start_serving_pipeline,
+    start_transactional_serving_pipeline,
 )
 
 # excluded from the default gate (reference-integration end-to-end); see pytest.ini
@@ -62,7 +63,7 @@ def _run_pipeline(spark, tmp_path, rows):
     src = str(tmp_path / "txns")
     spark.createDataFrame(rows, STOCK_TRANSACTION_SCHEMA).coalesce(1).write.parquet(src)
     serving, ckpt = str(tmp_path / "serving"), str(tmp_path / "ckpt")
-    q = start_serving_pipeline(file_transaction_stream(spark, src), serving, ckpt)
+    q = start_transactional_serving_pipeline(file_transaction_stream(spark, src), serving, ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -71,7 +72,7 @@ def _run_pipeline(spark, tmp_path, rows):
 
 
 def _client(spark, serving):
-    app = create_app(InteractiveQueryService(spark.read.parquet(serving)))
+    app = create_app(InteractiveQueryService(ManifestServingSink(serving).read(spark)))
     app.config["TESTING"] = True
     return app.test_client()
 
@@ -98,7 +99,7 @@ def test_key_query_and_failover(spark, tmp_path):
     spark.createDataFrame(extra, STOCK_TRANSACTION_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(src)
-    q2 = start_serving_pipeline(file_transaction_stream(spark, src), serving, ckpt)
+    q2 = start_transactional_serving_pipeline(file_transaction_stream(spark, src), serving, ckpt)
     try:
         q2.processAllAvailable()
     finally:
@@ -119,7 +120,7 @@ def test_range_query_returns_all_six_symbols(spark, tmp_path):
     body = c.get("/streams-iq/range?lower=CFLT&upper=ZELK").get_json()
     assert sorted(r["symbol"] for r in body["result"]) == sorted(SYMBOLS)
 
-    q2 = start_serving_pipeline(file_transaction_stream(spark, src), serving, ckpt)
+    q2 = start_transactional_serving_pipeline(file_transaction_stream(spark, src), serving, ckpt)
     try:
         q2.processAllAvailable()
     finally:

@@ -84,7 +84,7 @@ def test_filtered_range_bad_predicate_is_500_envelope(client):
     assert body["errorMessage"] and body["result"] is None
 
 
-def test_partition_for_key(client):
+def test_partition_for_key(client, spark, tmp_path):
     from kafkastreamsinteractivequeries_spark.functions.partitioning import (
         partition_for_key,
     )
@@ -100,7 +100,21 @@ def test_partition_for_key(client):
         "/streams-iq/partition/purchase?partitions=2&scheme=spark"
     ).get_json()
     assert spark_scheme["scheme"] == "spark" and spark_scheme["partition"] in (0, 1)
-    assert client.get("/streams-iq/partition/x?scheme=bogus").status_code == 400
+    r = client.get("/streams-iq/partition/x?scheme=bogus")
+    assert r.status_code == 400
+    assert r.get_json()["result"] is None
+    assert "unknown scheme 'bogus'" in r.get_json()["errorMessage"]
+    # routing needs only the session: a live service answers before the
+    # store has any committed manifest
+    live = create_app(LiveSnapshotQueryService(spark, ManifestServingSink(str(tmp_path / "empty"))))
+    live.config["TESTING"] = True
+    lc = live.test_client()
+    r = lc.get("/streams-iq/partition/purchase?partitions=2&scheme=spark")
+    assert r.status_code == 200
+    assert r.get_json()["partition"] == spark_scheme["partition"]
+    r = lc.get("/streams-iq/partition/purchase?scheme=bogus")
+    assert r.status_code == 400
+    assert "unknown scheme 'bogus'" in r.get_json()["errorMessage"]
     # a malformed or non-positive partition count is a client error
     for bad in ("abc", "0", "-3"):
         r = client.get(f"/streams-iq/partition/purchase?partitions={bad}")

@@ -992,17 +992,15 @@ def test_knn_union_cached_index_matches_fresh_training(spark, sf_dir):
 
 def test_append_codes_equals_one_shot_encode(spark, sf_dir):
     """Incremental ANN ingest contract: encoding two corpus halves
-    SEPARATELY against the frozen quantizers and unioning
-    (append_pq_codes / append_ivfpq_codes) is bit-identical to the
+    SEPARATELY against the frozen quantizer and unioning
+    (append_pq_codes) is bit-identical to the
     one-shot landed encode — codes are a pure function of (vector,
     quantizer), so ingest batching can never change the store."""
     import __spark_entry__ as entry_mod
     from pyspark.sql import functions as F
 
     from kafkastreamsinteractivequeries_spark.operators.similarity import (
-        append_ivfpq_codes,
         append_pq_codes,
-        ivfpq_codes,
         pq_codes,
     )
     from kafkastreamsinteractivequeries_spark.sources.tables import load_table
@@ -1018,17 +1016,6 @@ def test_append_codes_equals_one_shot_encode(spark, sf_dir):
     got = {r["vec_id"]: list(r["codes"]) for r in appended.collect()}
     want = {r["vec_id"]: list(r["codes"]) for r in index["pq_codes"].collect()}
     assert got == want
-
-    appended_r = append_ivfpq_codes(
-        ivfpq_codes(base, index["ivfpq_centroids"], index["ivfpq_book"], m=8),
-        batch,
-        index["ivfpq_centroids"],
-        index["ivfpq_book"],
-        m=8,
-    )
-    got_r = sorted(map(tuple, appended_r.collect()))
-    want_r = sorted(map(tuple, index["ivfpq_codes"].collect()))
-    assert got_r == want_r
 
 
 def test_reciprocal_rank_fusion_semantics(spark):

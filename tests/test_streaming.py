@@ -13,10 +13,10 @@ from kafkastreamsinteractivequeries_spark.plans.queries import FilteredRangeQuer
 from kafkastreamsinteractivequeries_spark.plans.service import InteractiveQueryService
 from kafkastreamsinteractivequeries_spark.schemas import STOCK_TRANSACTION_SCHEMA
 from kafkastreamsinteractivequeries_spark.streaming.pipeline import (
-    ParquetServingSink,
+    ManifestServingSink,
     file_transaction_stream,
     memory_changelog,
-    start_serving_pipeline,
+    start_transactional_serving_pipeline,
     streaming_aggregation,
 )
 
@@ -44,60 +44,23 @@ def txn_dir(spark, tmp_path):
 def test_streaming_agg_matches_batch(spark, tmp_path, txn_dir):
     stream = file_transaction_stream(spark, txn_dir)
     assert stream.isStreaming
-    q = start_serving_pipeline(stream, str(tmp_path / "serving"), str(tmp_path / "ckpt"))
+    q = start_transactional_serving_pipeline(stream, str(tmp_path / "serving"), str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    serving = spark.read.parquet(str(tmp_path / "serving"))
+    serving = ManifestServingSink(str(tmp_path / "serving")).read(spark)
     batch = aggregate_transactions(spark.createDataFrame(_txn_rows(), STOCK_TRANSACTION_SCHEMA))
     got = {(r.symbol, r.buys, r.sells, r.number_shares) for r in serving.collect()}
     want = {(r.symbol, r.buys, r.sells, r.number_shares) for r in batch.collect()}
     assert got == want
 
 
-def test_serving_upsert_across_batches(spark, tmp_path, txn_dir):
-    # Second batch of files updates a subset of keys; the serving table
-    # must hold the cumulative aggregate (state carries across batches)
-    # and the untouched keys' previous values.
-    serving_path = str(tmp_path / "serving")
-    stream = file_transaction_stream(spark, txn_dir)
-    q = start_serving_pipeline(stream, serving_path, str(tmp_path / "ckpt"))
-    try:
-        q.processAllAvailable()
-        extra = [("CFLT", True, 1000.0, 10, T0 + dt.timedelta(hours=1))]
-        spark.createDataFrame(extra, STOCK_TRANSACTION_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(txn_dir)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    svc = InteractiveQueryService(spark.read.parquet(serving_path))
-    cflt = svc.execute(KeyQuery.with_key("CFLT")).collect()[0]
-    assert cflt.buys == 200.0 + 1000.0 and cflt.number_shares == 25
-    # untouched key still present with original value
-    zelk = svc.execute(KeyQuery.with_key("ZELK")).collect()[0]
-    assert zelk.number_shares == 15
-    # IQ surface over the live serving table
-    got = {
-        r.symbol
-        for r in svc.execute(
-            FilteredRangeQuery.with_bounds("CFLT", "ZELK").predicate("@.buys > @.sells")
-        ).collect()
-    }
-    assert "CFLT" in got
-
-
 def test_transactional_serving_upsert_across_batches(spark, tmp_path, txn_dir):
-    # Same contract as the parquet sink, but through the manifest log:
-    # cumulative aggregate for updated keys, previous values preserved
-    # for untouched keys, every read a complete committed snapshot.
-    from kafkastreamsinteractivequeries_spark.streaming.pipeline import (
-        ManifestServingSink,
-        start_transactional_serving_pipeline,
-    )
-
+    # Second batch of files updates a subset of keys; the serving store
+    # must hold the cumulative aggregate (state carries across batches)
+    # and the untouched keys' previous values, every read a complete
+    # committed snapshot.
     serving_path = str(tmp_path / "serving_tx")
     stream = file_transaction_stream(spark, txn_dir)
     q = start_transactional_serving_pipeline(stream, serving_path, str(tmp_path / "ckpt_tx"))
@@ -120,6 +83,14 @@ def test_transactional_serving_upsert_across_batches(spark, tmp_path, txn_dir):
     assert cflt.buys == 200.0 + 1000.0 and cflt.number_shares == 25
     zelk = svc.execute(KeyQuery.with_key("ZELK")).collect()[0]
     assert zelk.number_shares == 15 and zelk.buys == first["ZELK"].buys
+    # IQ surface over the live serving store
+    got = {
+        r.symbol
+        for r in svc.execute(
+            FilteredRangeQuery.with_bounds("CFLT", "ZELK").predicate("@.buys > @.sells")
+        ).collect()
+    }
+    assert "CFLT" in got
 
     # old batch dirs referenced by the current snapshot survive vacuum;
     # fully superseded ones are deleted
@@ -199,7 +170,7 @@ def test_checkpoint_recovery(spark, tmp_path, txn_dir):
     # state must survive.
     serving_path = str(tmp_path / "serving")
     ckpt = str(tmp_path / "ckpt")
-    q = start_serving_pipeline(file_transaction_stream(spark, txn_dir), serving_path, ckpt)
+    q = start_transactional_serving_pipeline(file_transaction_stream(spark, txn_dir), serving_path, ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -208,13 +179,13 @@ def test_checkpoint_recovery(spark, tmp_path, txn_dir):
     spark.createDataFrame(extra, STOCK_TRANSACTION_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(txn_dir)
-    q2 = start_serving_pipeline(file_transaction_stream(spark, txn_dir), serving_path, ckpt)
+    q2 = start_transactional_serving_pipeline(file_transaction_stream(spark, txn_dir), serving_path, ckpt)
     try:
         q2.processAllAvailable()
     finally:
         q2.stop()
     msft = (
-        InteractiveQueryService(spark.read.parquet(serving_path))
+        InteractiveQueryService(ManifestServingSink(serving_path).read(spark))
         .execute(KeyQuery.with_key("MSFT"))
         .collect()[0]
     )

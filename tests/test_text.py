@@ -1197,52 +1197,6 @@ def test_tokenizer_fertility(spark):
     assert xx["unk_permille"] == 1000
 
 
-def test_decode_crawl_bytes_detection_ladder(spark):
-    """Charset detection: BOM beats meta beats HTTP-declared beats
-    utf-8-replace; latin-1 labels decode as cp1252 (the WHATWG
-    superset rule); invalid bytes degrade, never error."""
-    from kafkastreamsinteractivequeries_spark.operators.text import (
-        decode_crawl_bytes,
-    )
-
-    cp1252_html = '<meta charset="iso-8859-1"><p>caf\xe9 — ok</p>'
-    rows = [
-        (1, bytearray("﻿utf8 bom é".encode("utf-8")), None),
-        (2, bytearray("utf16 é".encode("utf-16")), None),  # emits FF FE BOM
-        (3, bytearray(cp1252_html.encode("cp1252")), None),   # meta wins
-        (4, bytearray("declared é".encode("cp1252")), "latin-1"),
-        (5, bytearray(b"plain ascii"), None),
-        (6, bytearray(b"bad \xff\xfe\x00utf8 tail" + "é".encode()), "utf-8"),
-        (7, None, None),
-    ]
-    pages = spark.createDataFrame(
-        rows, "doc_id long, body binary, http_charset string"
-    )
-    out = {
-        r["doc_id"]: r
-        for r in decode_crawl_bytes(
-            pages, declared_col="http_charset"
-        ).collect()
-    }
-    assert out[1]["text"] == "utf8 bom é" and out[1]["charset"] == "utf-8"
-    assert out[2]["text"] == "utf16 é" and out[2]["charset"] == "utf-16-le"
-    assert out[3]["charset"] == "cp1252" and "café — ok" in out[3]["text"]
-    assert out[4]["text"] == "declared é" and out[4]["charset"] == "cp1252"
-    assert out[5]["charset"] == "utf-8" and out[5]["text"] == "plain ascii"
-    assert out[7]["text"] is None
-    # row 6 starts with bad bytes but NOT a BOM at position 0? It IS
-    # "bad " first — so utf-8 with replacement characters, no error
-    assert out[6]["charset"] == "utf-8" and "�" in out[6]["text"]
-
-    # string doc ids: the output schema must derive the id type from
-    # the input (WARC record ids are strings), not hardcode long
-    spages = spark.createDataFrame(
-        [("urn:uuid:1", bytearray(b"abc"))], "doc_id string, body binary"
-    )
-    srow = decode_crawl_bytes(spages).collect()[0]
-    assert srow["doc_id"] == "urn:uuid:1" and srow["text"] == "abc"
-
-
 def _brute_min_segmentation(w, costs, max_piece_len, unk):
     """Independent reference: enumerate EVERY segmentation of w into
     vocab pieces (unknown single chars allowed at unk cost), pick the
