@@ -29,7 +29,10 @@ from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from kafkastreamsinteractivequeries_spark.functions.predicate import compile_predicate
+from kafkastreamsinteractivequeries_spark.functions.predicate import (
+    PredicateSyntaxError,
+    compile_predicate,
+)
 
 
 class Query:
@@ -208,6 +211,9 @@ class QueryResponse:
     error_message: str | None = None
     execution_info: dict[str, list[str]] = field(default_factory=dict)
     host_information: str | None = None
+    # not part of the wire envelope: the error is the client's (a
+    # malformed predicate), so the REST layer answers 400, not 500
+    client_error: bool = False
 
     @staticmethod
     def with_result(result: list) -> "QueryResponse":
@@ -216,6 +222,12 @@ class QueryResponse:
     @staticmethod
     def with_error(msg: str) -> "QueryResponse":
         return QueryResponse(error_message=msg)
+
+    @staticmethod
+    def from_exception(exc: Exception) -> "QueryResponse":
+        return QueryResponse(
+            error_message=str(exc), client_error=isinstance(exc, PredicateSyntaxError)
+        )
 
     def add_execution_info(self, key: str, lines: list[str]) -> None:
         self.execution_info.setdefault(key, []).extend(lines)

@@ -14,13 +14,14 @@ objects against it.  Routing/scatter-gather/standby code disappears —
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from kafkastreamsinteractivequeries_spark.plans.queries import (
     KeyQuery,
     MultiKeyQuery,
     Query,
     QueryResponse,
+    RangeQuery,
 )
 
 
@@ -38,6 +39,22 @@ class InteractiveQueryService:
         """The query's frame plus the ``executionInfo`` lines that name
         what it reads (subclasses add the snapshot they resolved)."""
         return query.apply(self.serving_df, key_col=self.key_col), []
+
+    def _rows(
+        self, query: Query, limit: int | None, paged: bool = False, after: str | None = None
+    ) -> tuple[list[dict], list[str]]:
+        """Row dicts of ``query``, at most ``limit`` (falsy: all), and
+        the ``executionInfo`` lines naming what they were read from.
+        ``paged`` orders by key and keeps only keys above ``after``: the
+        keyset page of ``execute_page``.  The one hook a subclass
+        overrides to read rows another way."""
+        df, info = self._execute_with_info(query)
+        if paged:
+            if after is not None:
+                df = df.filter(F.col(self.key_col) > after)
+            df = df.orderBy(self.key_col)
+        rows = df.limit(limit).collect() if limit else df.collect()
+        return [r.asDict() for r in rows], info
 
     #: default collect cap for ``execute_response`` — matches the REST
     #: layer's cap; an unlimited default is a driver-OOM invitation at
@@ -58,11 +75,10 @@ class InteractiveQueryService:
             # predicate compile + Catalyst analysis can both fail (bad
             # syntax, unknown column) — the envelope captures either,
             # mirroring QueryResponse.withError (QueryResponse.java:7-13).
-            df, info = self._execute_with_info(query)
-            rows = df.limit(collect_limit).collect() if collect_limit else df.collect()
+            rows, info = self._rows(query, collect_limit)
         except Exception as exc:
-            return QueryResponse.with_error(str(exc))
-        resp = QueryResponse.with_result([r.asDict() for r in rows])
+            return QueryResponse.from_exception(exc)
+        resp = QueryResponse.with_result(rows)
         resp.host_information = "spark-driver"
         resp.add_execution_info(
             self.store_name, info + [f"{type(query).__name__} over {len(rows)} rows"]
@@ -84,8 +100,6 @@ class InteractiveQueryService:
         the range matches, which is what lets the REST layer serve
         unbounded range scans without unbounded collects.
         """
-        from pyspark.sql import functions as F
-
         if page_size < 1:
             # a non-positive page would return an empty page with no
             # cursor — indistinguishable from "scan complete" — so
@@ -94,16 +108,13 @@ class InteractiveQueryService:
                 f"page_size must be >= 1, got {page_size}"
             ), None
         try:
-            df, info = self._execute_with_info(query)
-            if after is not None:
-                df = df.filter(F.col(self.key_col) > after)
-            rows = df.orderBy(self.key_col).limit(page_size + 1).collect()
+            rows, info = self._rows(query, page_size + 1, paged=True, after=after)
         except Exception as exc:
-            return QueryResponse.with_error(str(exc)), None
+            return QueryResponse.from_exception(exc), None
         has_more = len(rows) > page_size
         rows = rows[:page_size]
         next_cursor = rows[-1][self.key_col] if has_more and rows else None
-        resp = QueryResponse.with_result([r.asDict() for r in rows])
+        resp = QueryResponse.with_result(rows)
         resp.host_information = "spark-driver"
         resp.add_execution_info(
             self.store_name,
@@ -124,31 +135,53 @@ class LiveSnapshotQueryService(InteractiveQueryService):
     this: readers always see a complete committed snapshot, across
     stream restarts, because the manifest log survives the stream).
 
-    Cost per request: one listing of the manifest directory (the
-    freshness check).  The manifest and file index of a version are
-    built once, when the first request after its commit arrives.
-    ``KeyQuery`` and ``MultiKeyQuery`` read only their keys'
-    directories — the route-to-owning-partition of
-    ``StockController.java:364-375`` — and still apply their own
-    predicate; range and filtered queries scan the snapshot's full
-    frame.  Snapshot isolation comes from the sink's commit protocol:
-    a query never observes a partially-replaced key, successive reads
-    only ever move FORWARD through committed versions, and
-    ``executionInfo`` names the version served (``snapshot v<id>``).
+    On a store on a local path, ``KeyQuery``, ``MultiKeyQuery`` and
+    ``RangeQuery`` (paged or not) are read in place on the driver, as
+    the reference reads its local store (``store/CustomQueryStore.java:36-66``):
+    one listing of the manifest directory finds the newest version, its
+    key index (built once per version) picks the keys' directories —
+    the route-to-owning-partition of ``StockController.java:364-375`` —
+    and pyarrow reads only those part files.  No Spark job runs, and at
+    most ``limit`` (page size + 1 for a page) keys are read.
+    ``FilteredRangeQuery``, the lazy ``execute``, stores on other file
+    systems and stores with a column that is not a str, bool, int or
+    float scan the version's Spark frame instead, built once per
+    version.  Either way a request reads one committed version, so it
+    never observes a partially-replaced key, successive reads only move
+    FORWARD through versions, and ``executionInfo`` names the version
+    served (``snapshot v<id>``); a driver read adds how many key
+    directories it read.
     """
 
     def __init__(self, spark, sink, key_col: str = "symbol", store_name: str = "stock-aggregation-state-store"):
         self._spark = spark
         self._sink = sink
+        # keyed reads go to the driver reader when the query key is the
+        # key the sink lays out its directories by, on a local path
+        self._driver_reads = sink.local_root is not None and key_col == sink.partition_col
         super().__init__(serving_df=None, key_col=key_col, store_name=store_name)
 
     def _execute_with_info(self, query: Query) -> tuple[DataFrame, list[str]]:
         version = self._sink.latest_version(self._spark)
-        keys = None
-        if self.key_col == self._sink.partition_col:
-            if isinstance(query, KeyQuery):
-                keys = (query.key,)
-            elif isinstance(query, MultiKeyQuery):
-                keys = query.keys
-        df = self._sink.read(self._spark, keys=keys, version=version)
+        df = self._sink.read(self._spark, version=version)
         return query.apply(df, key_col=self.key_col), [f"snapshot v{version}"]
+
+    def _rows(
+        self, query: Query, limit: int | None, paged: bool = False, after: str | None = None
+    ) -> tuple[list[dict], list[str]]:
+        if self._driver_reads and isinstance(query, (KeyQuery, MultiKeyQuery, RangeQuery)):
+            version = self._sink.latest_version(self._spark)
+            if version is None:
+                raise FileNotFoundError(f"no committed manifest under {self._sink.path}")
+            if isinstance(query, RangeQuery):
+                keys, lower, upper = None, query.lower, query.upper
+            else:
+                keys = (query.key,) if isinstance(query, KeyQuery) else query.keys
+                lower = upper = None
+            got = self._sink.read_rows(
+                version, keys, lower, upper, after if paged else None, limit or None
+            )
+            if got is not None:
+                rows, dirs = got
+                return rows, [f"snapshot v{version}", f"{dirs} key directories read"]
+        return super()._rows(query, limit, paged, after)

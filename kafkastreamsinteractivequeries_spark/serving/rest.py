@@ -24,11 +24,16 @@ host-to-host hops, and standby failover have no analog: a single
 DataFrame query is already distributed and fault-tolerant, so the
 whole routing layer collapses into ``InteractiveQueryService``.
 
-Scale note: REST reads hit the *serving* DataFrame. Point it at a
-compacted parquet/Delta snapshot maintained by the streaming upsert
-sink (streaming/pipeline.py), not at the raw 100 TB fact table — the
-query path is then a pruned scan of the aggregate, independent of
+Scale note: REST reads hit the *serving* table, never the raw fact
+table.  Point ``InteractiveQueryService`` at a compacted aggregate, or
+serve the store the streaming upsert sink maintains
+(streaming/pipeline.py) through ``LiveSnapshotQueryService``: its key,
+multikey and range reads open only the picked keys' files on the
+driver and run no Spark job, so their cost follows the keys read, not
 ingest volume.
+
+A client error (a malformed predicate, limit or cursor, too many keys)
+is answered 400 with the error envelope; 500 is kept for server faults.
 """
 
 from __future__ import annotations
@@ -54,6 +59,12 @@ def _envelope(resp: QueryResponse) -> dict[str, Any]:
         "executionInfo": resp.execution_info,
         "hostInformation": resp.host_information,
     }
+
+
+def _status(resp: QueryResponse) -> int:
+    if not resp.error_message:
+        return 200
+    return 400 if resp.client_error else 500
 
 
 def _page_params(req, collect_limit: int | None):
@@ -117,8 +128,7 @@ def create_app(
 
     def run(query) -> Any:
         resp = service.execute_response(query, collect_limit=collect_limit)
-        status = 500 if resp.error_message else 200
-        return jsonify(_envelope(resp)), status
+        return jsonify(_envelope(resp)), _status(resp)
 
     @app.get("/streams-iq/keyquery/<symbol>")
     def keyquery(symbol: str):
@@ -126,8 +136,13 @@ def create_app(
 
     @app.get("/streams-iq/multikey/<symbols>")
     def multikey(symbols: str):
-        keys = [s for s in symbols.split(",") if s]
-        return run(MultiKeyQuery.with_keys(keys))
+        query = MultiKeyQuery.with_keys(s for s in symbols.split(",") if s)
+        if collect_limit is not None and len(query.keys) > collect_limit:
+            # one row per key: a capped answer would drop keys silently
+            return jsonify(_envelope(QueryResponse.with_error(
+                f"multikey asks for {len(query.keys)} distinct keys; "
+                f"the cap is collect_limit={collect_limit}"))), 400
+        return run(query)
 
     @app.get("/streams-iq/range")
     def range_query():
@@ -149,7 +164,7 @@ def create_app(
             resp, next_cursor = service.execute_page(q, page_size, after=after)
             body = _envelope(resp)
             body["nextCursor"] = next_cursor
-            return jsonify(body), 500 if resp.error_message else 200
+            return jsonify(body), _status(resp)
         return run(q)
 
     @app.get("/streams-iq/windowrange")
@@ -208,7 +223,8 @@ def create_app(
                     result_df = result_df.limit(collect_limit)
                 rows = result_df.collect()
         except Exception as exc:
-            return jsonify(_envelope(QueryResponse.with_error(str(exc)))), 500
+            resp = QueryResponse.from_exception(exc)
+            return jsonify(_envelope(resp)), _status(resp)
         resp = QueryResponse.with_result(
             [{k: (str(v) if hasattr(v, "isoformat") else v) for k, v in r.asDict().items()}
              for r in rows]

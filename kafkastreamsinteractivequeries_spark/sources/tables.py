@@ -84,27 +84,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     runtime-settable SQLConf, so set it here rather than relying on the
     session builder having done so.
 
-    The returned DataFrame is memoized per (session, sf_dir, name,
-    on-disk fingerprint) — it is a lazy plan, identical on every call,
-    and callers only ever derive from it (DataFrames are immutable).
-    The fingerprint (mtime + size / entry count) guards the documented
-    one-immutable-corpus-per-process assumption: a corpus regenerated
-    in-process at the same path misses the memo instead of silently
-    reusing a stale file listing.
+    The returned DataFrame is memoized per (session, path) together
+    with the path's on-disk fingerprint — it is a lazy plan, identical
+    on every call, and callers only ever derive from it (DataFrames are
+    immutable).  The fingerprint (mtime + size / entry count) guards
+    the documented one-immutable-corpus-per-process assumption: a
+    corpus regenerated in-process at the same path replaces its entry
+    instead of silently reusing a stale file listing, so the memo holds
+    one entry per path however often the path is rewritten.
     """
     per_session = _TABLE_MEMO.setdefault(spark, {})
     path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
-    key = (path, _path_fingerprint(path))
-    got = per_session.get(key)
-    if got is not None:
-        return got
+    fingerprint = _path_fingerprint(path)
+    got = per_session.get(path)
+    if got is not None and got[0] == fingerprint:
+        return got[1]
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     for c in _NANO_TS_COLUMNS.get(name, ()):
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
             # integer `div` (not `/`): nanos exceed double's 2^53 mantissa
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    per_session[key] = df
+    per_session[path] = (fingerprint, df)
     return df
 
 

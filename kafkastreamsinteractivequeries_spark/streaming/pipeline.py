@@ -28,9 +28,13 @@ or ``LiveSnapshotQueryService``.
 
 from __future__ import annotations
 
+import bisect
 import json
+import os
+import re
 import threading
 from collections.abc import Iterable
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -134,10 +138,85 @@ def _refuse_foreign_checkpoint(store: str, committed: str, newest: int | None, b
         )
 
 
+def _local_path(path: str) -> str | None:
+    """``path`` on the local file system (``file:`` or no scheme), or
+    None when it names another file system (``hdfs:``, ``s3a:``, ...)."""
+    parts = urlsplit(path)
+    return os.path.abspath(parts.path) if parts.scheme in ("", "file") else None
+
+
+_ESCAPED = re.compile(r"%([0-9A-Fa-f]{2})")
+# the directory Spark writes for an empty-string (or null) partition value
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _dir_key(name: str) -> str:
+    """The key of a ``_bucket=<name>`` directory: Hive's ``%XX``
+    unescape of Spark's partition-path escaping (``x%3Ay`` → ``x:y``).
+    The sink drops null keys, so the default partition holds ``""``."""
+    if name == _DEFAULT_PARTITION:
+        return ""
+    return _ESCAPED.sub(lambda m: chr(int(m.group(1), 16)), name)
+
+
+def _plain(schema) -> bool:
+    """True when every column of an Arrow ``schema`` is a str, bool,
+    int or float: the types whose ``to_pylist`` values equal a Spark
+    ``collect``'s.  Timestamps, binary and nested types convert
+    differently."""
+    from pyarrow import types as t
+
+    return all(
+        t.is_string(c) or t.is_boolean(c) or t.is_integer(c) or t.is_floating(c)
+        for c in schema.types
+    )
+
+
+class _Version:
+    """One committed manifest and its key index: every key in Spark's
+    string order (UTF-8 bytes, which Python's code-point order of
+    ``str`` equals), aligned with the directory holding its rows."""
+
+    __slots__ = ("version", "files", "keys", "dirs", "by_key")
+
+    def __init__(self, version: int, files: dict[str, str]):
+        self.version = version
+        self.files = files
+        pairs = sorted((_dir_key(name), d) for name, d in files.items())
+        self.keys = [k for k, _ in pairs]
+        self.dirs = [d for _, d in pairs]
+        self.by_key = dict(pairs)
+
+    def pick(
+        self,
+        keys: Iterable[str] | None,
+        lower: str | None,
+        upper: str | None,
+        after: str | None,
+        limit: int | None,
+    ) -> list[tuple[str, str]]:
+        """(key, directory) of the keys a query reads, in key order, at
+        most ``limit``: the given ``keys``, else the inclusive range
+        [``lower``, ``upper``]; either way only keys above ``after``."""
+        if keys is not None:
+            picked = sorted((k, self.by_key[k]) for k in set(keys) if k in self.by_key)
+            if after is not None:
+                picked = [p for p in picked if p[0] > after]
+            return picked[:limit]
+        lo = 0 if lower is None else bisect.bisect_left(self.keys, lower)
+        if after is not None:
+            lo = max(lo, bisect.bisect_right(self.keys, after))
+        hi = len(self.keys) if upper is None else bisect.bisect_right(self.keys, upper)
+        if limit is not None:
+            hi = min(hi, lo + limit)
+        return list(zip(self.keys[lo:hi], self.dirs[lo:hi]))
+
+
 class ManifestServingSink:
     """Transactional foreachBatch upsert: immutable per-batch data files
     committed by an append-only manifest log (a minimal table format,
-    the Delta-less ACID upsert).  Read the store only through ``read``.
+    the Delta-less ACID upsert).  Read the store only through ``read``
+    or ``read_rows``.
 
     Why: plain dynamic partition overwrite deletes-then-writes partition
     directories in place, so a concurrent reader can observe a key's
@@ -158,10 +237,14 @@ class ManifestServingSink:
        the query's checkpoint does not belong to this store (a fresh
        checkpoint restarts batch ids at 0), so the call raises instead
        of deleting a directory the newest manifest still references.
-    1. data: write the batch's rows to ``data/batch-<id>/_bucket=<key>/``
-       (fresh directory — never mutated after commit; a replay of a
-       batch whose manifest never landed rewrites the directory before
-       any manifest references it).
+    1. data: drop null-key rows (no route can address a null key, and
+       Spark would write it to the empty-string key's directory; Kafka
+       Streams' grouped aggregations skip null-key records the same
+       way), then write the batch's rows to
+       ``data/batch-<id>/_bucket=<key>/`` (fresh directory — never
+       mutated after commit; a replay of a batch whose manifest never
+       landed rewrites the directory before any manifest references
+       it).
     2. manifest: merge {key → data dir} over the previous snapshot and
        write ``manifest/v<id>.json`` via temp-file + rename.  Rename of
        a closed file to a NEW name is the atomic commit primitive on
@@ -170,14 +253,15 @@ class ManifestServingSink:
        conditional-put wrapper — same contract as every rename-based
        committer.)
 
-    Read cost: every ``read`` lists the manifest directory once to find
-    the newest committed version, so the first read after a commit
-    already serves it.  The manifest, the file index and the schema of
-    a version are built once per (version, session) and reused until a
-    newer version commits; rows are never cached.  ``read(spark,
-    keys=...)`` lists and scans only those keys' directories and reuses
-    the snapshot's schema, so a point lookup runs no schema-inference
-    job.
+    Read cost: every read lists the manifest directory once to find the
+    newest committed version (from Python on a local store, a Hadoop
+    glob elsewhere), so the first read after a commit already serves
+    it.  A version's manifest and key index are built once, and its
+    Spark frame (``read``) once per session, then reused until a newer
+    version commits; rows are never cached.  On a local store,
+    ``read_rows`` answers keys or a key range on the driver: it picks
+    the keys' directories from the index and reads only their part
+    files with pyarrow — no Spark job.
 
     Scale: per-batch work ∝ updated keys (new files + one small JSON),
     and old snapshots remain readable until ``vacuum()`` — which only
@@ -187,12 +271,17 @@ class ManifestServingSink:
     def __init__(self, path: str, partition_col: str = "symbol"):
         self.path = path.rstrip("/")
         self.partition_col = partition_col
-        # (session, version, {key dir name: data dir}, full frame) of the
-        # newest version read so far
+        # where the store's files are on this host, or None when they
+        # are not on a local path (reads then go through Spark only)
+        self.local_root = _local_path(self.path)
+        # _Version of the newest version read so far
         self._memo = None
+        # (session, version, full frame) of the newest version read
+        # through Spark so far
+        self._frame = None
         self._memo_lock = threading.Lock()
-        # (session, FileSystem, Path class, ExternalCatalogUtils): py4j
-        # pays one round trip per package segment of a class lookup
+        # (session, FileSystem, Path class): py4j pays one round trip per
+        # package segment of a class lookup
         self._jvm_refs = None
 
     def _manifest_dir(self) -> str:
@@ -202,26 +291,32 @@ class ManifestServingSink:
         refs = self._jvm_refs
         if refs is None or refs[0] is not spark:
             fs, jvm = _fs(spark, self.path)
-            refs = self._jvm_refs = (
-                spark,
-                fs,
-                jvm.org.apache.hadoop.fs.Path,
-                jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils,
-            )
+            refs = self._jvm_refs = (spark, fs, jvm.org.apache.hadoop.fs.Path)
         return refs[1:]
 
     def latest_version(self, spark: SparkSession) -> int | None:
         """Id of the newest committed manifest, or None before the first
-        commit: one glob over the manifest directory."""
-        fs, path_cls, _ = self._refs(spark)
+        commit: one listing of the manifest directory."""
+        if self.local_root is not None:
+            try:
+                names = os.listdir(f"{self.local_root}/manifest")
+            except FileNotFoundError:
+                return None
+            # zero-padded names sort by version
+            newest = max((n for n in names if n[:1] == "v" and n.endswith(".json")), default=None)
+            return None if newest is None else int(newest[1:-5])
+        fs, path_cls = self._refs(spark)
         found = fs.globStatus(path_cls(f"{self._manifest_dir()}/v[0-9]*.json"))
         if not found:
             return None
-        # globStatus sorts by name; zero-padded names sort by version
+        # globStatus sorts by name
         return int(found[len(found) - 1].getPath().getName()[1:-5])
 
     def _manifest(self, spark: SparkSession, version: int) -> dict[str, str]:
         path = f"{self._manifest_dir()}/v{version:020d}.json"
+        if self.local_root is not None:
+            with open(_local_path(path), encoding="utf-8") as fh:
+                return json.load(fh)
         fs, jvm = _fs(spark, path)
         stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
         try:
@@ -248,7 +343,8 @@ class ManifestServingSink:
         # _bucket duplicates the key into the directory layout while the
         # data files keep the real column — leaf dirs stay self-contained
         (
-            batch_df.withColumn("_bucket", F.col(self.partition_col))
+            batch_df.filter(F.col(self.partition_col).isNotNull())
+            .withColumn("_bucket", F.col(self.partition_col))
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(out)
@@ -274,49 +370,77 @@ class ManifestServingSink:
         if not fs.rename(tmp, final) and not fs.exists(final):
             raise IOError(f"manifest commit failed for batch {batch_id}")
 
-    def _snapshot(self, spark: SparkSession, version: int) -> tuple[dict[str, str], DataFrame]:
-        """Manifest and full frame of ``version``, built once per
-        (version, session); only a newer version replaces the memo."""
+    def _version(self, spark: SparkSession, version: int) -> _Version:
+        """Manifest and key index of ``version``, built once; only a
+        newer version replaces the memo."""
         memo = self._memo
-        if memo is not None and memo[0] is spark and memo[1] == version:
-            return memo[2], memo[3]
+        if memo is not None and memo.version == version:
+            return memo
         files = self._manifest(spark, version)
         if not files:
             raise FileNotFoundError(f"manifest v{version} under {self.path} is empty")
-        df = spark.read.parquet(*sorted(set(files.values())))
-        df = df.drop("_bucket") if "_bucket" in df.columns else df
+        built = _Version(version, files)
         with self._memo_lock:
             cur = self._memo
-            if cur is None or cur[0] is not spark or cur[1] < version:
-                self._memo = (spark, version, files, df)
-        return files, df
+            if cur is None or cur.version < version:
+                self._memo = built
+        return built
 
-    def read(
-        self,
-        spark: SparkSession,
-        keys: Iterable[str] | None = None,
-        version: int | None = None,
-    ) -> DataFrame:
+    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Committed snapshot ``version`` (default: the newest) of the
-        serving table.  With ``keys``, the frame covers only those keys'
-        directories; unknown keys contribute no rows."""
+        serving table as a Spark frame, built once per (version,
+        session)."""
         if version is None:
             version = self.latest_version(spark)
         if version is None:
             raise FileNotFoundError(f"no committed manifest under {self.path}")
-        files, full = self._snapshot(spark, version)
-        if keys is None:
-            return full
-        # manifest keys are the escaped partition directory names
-        to_dir = self._refs(spark)[2]
-        dirs = sorted({
-            files[name]
-            for name in (to_dir.getPartitionValueString(k) for k in keys)
-            if name in files
-        })
-        if not dirs:
-            return spark.createDataFrame([], full.schema)
-        return spark.read.schema(full.schema).parquet(*dirs)
+        frame = self._frame
+        if frame is not None and frame[0] is spark and frame[1] == version:
+            return frame[2]
+        files = self._version(spark, version).files
+        df = spark.read.parquet(*sorted(set(files.values())))
+        df = df.drop("_bucket") if "_bucket" in df.columns else df
+        with self._memo_lock:
+            cur = self._frame
+            if cur is None or cur[0] is not spark or cur[1] < version:
+                self._frame = (spark, version, df)
+        return df
+
+    def read_rows(
+        self,
+        version: int,
+        keys: Iterable[str] | None = None,
+        lower: str | None = None,
+        upper: str | None = None,
+        after: str | None = None,
+        limit: int | None = None,
+    ) -> tuple[list[dict], int] | None:
+        """Rows of committed ``version`` of a local store, read on the
+        driver: the rows of ``keys``, else of the inclusive key range
+        [``lower``, ``upper``]; only keys above ``after``; at most
+        ``limit`` rows, in key order.  Returns (row dicts in the files'
+        column order, number of key directories read), or None when
+        the files hold a column that is not a plain scalar (str, bool,
+        int, float), whose values only Spark converts faithfully.
+
+        Only the picked keys' part files are read, and each row is kept
+        only if its key is the key its directory was picked for."""
+        import pyarrow.parquet as pq  # loaded by the first driver read only
+
+        # a local store's manifest is read without the session
+        picked = self._version(None, version).pick(keys, lower, upper, after, limit)
+        col = self.partition_col
+        rows: list[dict] = []
+        for key, d in picked:
+            local = _local_path(d)
+            for name in sorted(os.listdir(local)):
+                if name[:1] in ("_", "."):
+                    continue  # _SUCCESS, checksum files: not data (Spark skips them too)
+                table = pq.ParquetFile(f"{local}/{name}").read(use_threads=False)
+                if not _plain(table.schema):
+                    return None
+                rows.extend(r for r in table.to_pylist() if r[col] == key)
+        return rows[:limit], len(picked)
 
     def vacuum(self, spark: SparkSession) -> list[str]:
         """Delete batch directories no current key references; returns

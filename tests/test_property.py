@@ -7,6 +7,9 @@
    suite (``JacksonProtobufMappingProviderTest.java:73-152``).
 2. ``to_json``/``from_json`` round-trips the transaction schema
    losslessly (the analog of ``SerdeUtilTest.java``).
+3. The live store's driver reader returns exactly what its Spark read
+   returns — rows, page cursors and snapshot version — for random
+   stores and random key, multikey, range and paged-range queries.
 """
 
 import math
@@ -342,3 +345,86 @@ def test_canonicalize_url_matches_python_reference(
         .collect()[0]["c"]
     )
     assert got == _ref_canonical_url(url), f"url={url!r}"
+
+
+# ---------------------------------------------------------------------------
+# Live store: the driver reader against the Spark read of the same snapshot
+# ---------------------------------------------------------------------------
+
+# unicode, escaped on disk (":", "/", "%", "="), the empty key, and keys
+# whose UTF-8 byte order differs from UTF-16 order ("｡" < "\U0001f600")
+LIVE_KEYS = ["", "A", "B", "a", "a b", "x:y", "x%y", "a/b", "=", "é", "日本", "｡", "\U0001f600"]
+
+
+def _spark_path_service(spark, sink):
+    """The live service with the base class's row hook: every query
+    scans the snapshot's Spark frame."""
+    from kafkastreamsinteractivequeries_spark.plans.service import (
+        InteractiveQueryService,
+        LiveSnapshotQueryService,
+    )
+
+    class SparkPath(LiveSnapshotQueryService):
+        _rows = InteractiveQueryService._rows
+
+    return SparkPath(spark, sink)
+
+
+def _typed(rows) -> list[list[tuple]]:
+    """Rows as (column, type, value) lists: dict equality alone ignores
+    column order and equates 1 with 1.0."""
+    return [[(k, type(v), v) for k, v in r.items()] for r in rows]
+
+
+def _version_of(resp) -> int:
+    line = resp.execution_info["stock-aggregation-state-store"][0]
+    assert line.startswith("snapshot v"), line
+    return int(line[len("snapshot v"):])
+
+
+_bound = st.one_of(st.none(), st.sampled_from(LIVE_KEYS), st.text(alphabet="AaBbx:é日\U0001f600", max_size=3))
+
+
+@settings(max_examples=8, deadline=None)
+@given(data=st.data())
+def test_live_driver_reads_match_spark_reads(spark, tmp_path_factory, data):
+    from kafkastreamsinteractivequeries_spark.plans.queries import (
+        KeyQuery,
+        MultiKeyQuery,
+        RangeQuery,
+    )
+    from kafkastreamsinteractivequeries_spark.plans.service import LiveSnapshotQueryService
+    from kafkastreamsinteractivequeries_spark.streaming.pipeline import ManifestServingSink
+
+    schema = "symbol string, buys double, sells double, number_shares long"
+    sink = ManifestServingSink(str(tmp_path_factory.mktemp("live") / "store"))
+    driver = LiveSnapshotQueryService(spark, sink)
+    via_spark = _spark_path_service(spark, sink)
+    n_commits = data.draw(st.integers(1, 3), label="commits")
+    for batch_id in range(n_commits):
+        keys = data.draw(st.lists(st.sampled_from(LIVE_KEYS + [None]), min_size=1, max_size=8, unique=True))
+        rows = [(k, float(batch_id), data.draw(st.floats(-1e6, 1e6)), batch_id * 100 + i)
+                for i, k in enumerate(keys)]
+        sink(spark.createDataFrame(rows, schema), batch_id)
+
+        def same(query):
+            got, want = driver.execute_response(query), via_spark.execute_response(query)
+            assert got.error_message is None and want.error_message is None
+            assert _version_of(got) == _version_of(want) == batch_id
+            assert _typed(got.result) == _typed(sorted(want.result, key=lambda r: r["symbol"].encode())), query
+
+        same(KeyQuery(data.draw(st.sampled_from(LIVE_KEYS), label="key")))
+        same(MultiKeyQuery.with_keys(data.draw(st.lists(st.sampled_from(LIVE_KEYS + ["NOPE"]), max_size=6))))
+        same(RangeQuery(data.draw(_bound, label="lower"), data.draw(_bound, label="upper")))
+        query = RangeQuery(data.draw(_bound, label="page lower"), data.draw(_bound, label="page upper"))
+        page_size = data.draw(st.integers(1, 4), label="page size")
+        cursor, pages = None, 0
+        while True:
+            got, got_cursor = driver.execute_page(query, page_size, after=cursor)
+            want, want_cursor = via_spark.execute_page(query, page_size, after=cursor)
+            assert _version_of(got) == _version_of(want) == batch_id
+            assert (_typed(got.result), got_cursor) == (_typed(want.result), want_cursor), (query, cursor)
+            cursor, pages = got_cursor, pages + 1
+            if cursor is None:
+                break
+            assert pages <= len(LIVE_KEYS)

@@ -77,9 +77,28 @@ def test_filtered_range(client):
     assert all(r["buys"] > r["sells"] for r in body2["result"])
 
 
-def test_filtered_range_bad_predicate_is_500_envelope(client):
-    r = client.get("/streams-iq/range?filter=@.buys >>> 1")
-    assert r.status_code == 500
+def test_filtered_range_bad_predicate_is_400_envelope(client, spark):
+    # a malformed predicate is the client's error, on every route
+    # that takes one, paged or not
+    for url in ("/streams-iq/range?filter=@.buys >>> 1",
+                "/streams-iq/range?filter=@.buys >>> 1&limit=2"):
+        r = client.get(url)
+        assert r.status_code == 400, url
+        body = r.get_json()
+        assert body["errorMessage"] and body["result"] is None
+    import datetime as dt
+
+    windows = spark.createDataFrame(
+        [("A", 1.0, dt.datetime(2024, 1, 1, 0), dt.datetime(2024, 1, 1, 1))],
+        "symbol string, buys double, window_start timestamp, window_end timestamp",
+    )
+    app = create_app(InteractiveQueryService(windows), windowed_df=windows)
+    app.config["TESTING"] = True
+    r = app.test_client().get(
+        "/streams-iq/windowrange?from=2024-01-01 00:00:00&to=2024-01-02 00:00:00"
+        "&filter=@.buys >>> 1"
+    )
+    assert r.status_code == 400
     body = r.get_json()
     assert body["errorMessage"] and body["result"] is None
 
@@ -171,16 +190,21 @@ def test_window_range_endpoint(spark, sf_dir):
     ).status_code == 501
 
 
-def test_range_pagination_pages_through_more_than_limit(spark):
-    # 26 keys, collect_limit=10: the plain range endpoint would
-    # truncate; the cursor pages through every row in bounded collects.
+def _capped_client(spark):
+    """26 keys ``ka``..``kz`` served with collect_limit=10."""
     df = spark.createDataFrame(
         [(f"k{chr(97 + i)}", float(i), float(i) / 2, i) for i in range(26)],
         "symbol string, buys double, sells double, number_shares long",
     )
     app = create_app(InteractiveQueryService(df), collect_limit=10)
     app.config["TESTING"] = True
-    c = app.test_client()
+    return app.test_client()
+
+
+def test_range_pagination_pages_through_more_than_limit(spark):
+    # 26 keys, collect_limit=10: the plain range endpoint would
+    # truncate; the cursor pages through every row in bounded collects.
+    c = _capped_client(spark)
 
     seen, cursor, pages = [], None, 0
     while True:
@@ -200,6 +224,19 @@ def test_range_pagination_pages_through_more_than_limit(spark):
     # cursor composes with range bounds and the predicate filter
     body = c.get("/streams-iq/range?lower=kb&upper=kz&limit=5&after=kc").get_json()
     assert [r["symbol"] for r in body["result"]] == ["kd", "ke", "kf", "kg", "kh"]
+
+
+def test_multikey_over_collect_limit_is_400(spark):
+    # 11 distinct keys cannot fit 10 rows: refuse rather than drop one
+    c = _capped_client(spark)
+    keys = [f"k{chr(97 + i)}" for i in range(11)]
+    r = c.get("/streams-iq/multikey/" + ",".join(keys))
+    assert r.status_code == 400
+    body = r.get_json()
+    assert body["result"] is None and "collect_limit=10" in body["errorMessage"]
+    # duplicates count once: 10 distinct keys are answered in full
+    body = c.get("/streams-iq/multikey/" + ",".join(keys[:10] + keys[:3])).get_json()
+    assert sorted(row["symbol"] for row in body["result"]) == keys[:10]
 
 
 def test_window_range_pagination(spark, sf_dir):
@@ -387,3 +424,104 @@ def test_live_snapshot_memo_under_concurrent_commits(spark, tmp_path):
     assert not any(t.is_alive() for t in threads)
     assert not bad, bad[:3]
     assert all(served[i][-1] == 3 for i in range(8))
+
+
+def test_live_keyed_reads_run_no_spark_job(spark, tmp_path):
+    # Key, multikey, range and paged-range reads of a local live store
+    # are answered on the driver from the snapshot's files.  A filtered
+    # range still runs on Spark: its jobs, tagged with a second group,
+    # show the job tracking works, and since the status listener sees
+    # events in order, the first group is complete once they appear.
+    import time
+
+    schema = "symbol string, buys double, sells double, number_shares long"
+    sink = ManifestServingSink(str(tmp_path / "live"))
+    rows = [("A", 1.0, 0.0, 1), ("B", 2.0, 0.0, 2), ("C", 3.0, 0.0, 3), ("x:y", 4.0, 0.0, 4)]
+    sink(spark.createDataFrame(rows, schema), 0)
+    app = create_app(LiveSnapshotQueryService(spark, sink))
+    app.config["TESTING"] = True
+    c = app.test_client()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def get(group, url):
+        sc.setJobGroup(group, group)
+        try:
+            r = c.get(url)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert r.status_code == 200, url
+        return r.get_json()
+
+    driver = "live-driver-reads"
+    assert [r["symbol"] for r in get(driver, "/streams-iq/keyquery/x:y")["result"]] == ["x:y"]
+    assert len(get(driver, "/streams-iq/multikey/A,C,NOPE")["result"]) == 2
+    assert len(get(driver, "/streams-iq/range?lower=B&upper=C")["result"]) == 2
+    page = get(driver, "/streams-iq/range?limit=2&after=A")
+    assert [r["symbol"] for r in page["result"]] == ["B", "C"] and page["nextCursor"] == "C"
+
+    spark_group = "live-spark-reads"
+    assert len(get(spark_group, "/streams-iq/range?filter=@.buys > 1")["result"]) == 3
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(spark_group) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(spark_group)
+    assert list(tracker.getJobIdsForGroup(driver)) == []
+
+
+def test_live_snapshots_fold_batches_over_non_null_keys(spark, tmp_path):
+    # Spark writes a null key and the empty-string key to one directory
+    # (__HIVE_DEFAULT_PARTITION__), so a batch that updates one of them
+    # must not publish the other's stale or foreign rows.  Null keys are
+    # dropped; every snapshot v<n> is the upsert fold of batches 0..n.
+    from kafkastreamsinteractivequeries_spark.plans.queries import KeyQuery, RangeQuery
+
+    schema = "symbol string, buys double, sells double, number_shares long"
+    batches = [
+        [(None, 1), ("", 2), ("A", 3)],
+        [("", 20)],
+        [(None, 30), ("x:y", 31)],
+        [("A", 40), (None, 41), ("", 42)],
+    ]
+    sink = ManifestServingSink(str(tmp_path / "live"))
+    svc = LiveSnapshotQueryService(spark, sink)
+    folds: list[dict] = []
+    for batch_id, batch in enumerate(batches):
+        sink(spark.createDataFrame([(k, 1.0, 0.0, n) for k, n in batch], schema), batch_id)
+        fold = dict(folds[-1]) if folds else {}
+        fold.update((k, n) for k, n in batch if k is not None)
+        folds.append(fold)
+        resp = svc.execute_response(RangeQuery())
+        assert resp.error_message is None
+        assert {r["symbol"]: r["number_shares"] for r in resp.result} == fold, batch_id
+        assert svc.execute_response(KeyQuery("")).result == [
+            {"symbol": "", "buys": 1.0, "sells": 0.0, "number_shares": fold[""]}
+        ]
+    for version, fold in enumerate(folds):
+        got = [(r.symbol, r.number_shares) for r in sink.read(spark, version=version).collect()]
+        assert sorted(got) == sorted(fold.items()), version
+
+
+def test_live_store_with_non_scalar_column_reads_through_spark(spark, tmp_path):
+    # Arrow and Spark convert timestamps differently, so a store whose
+    # files hold one is served by the Spark frame: the same rows as the
+    # batch service over that frame, no driver-read line.
+    import datetime as dt
+
+    from kafkastreamsinteractivequeries_spark.plans.queries import KeyQuery, RangeQuery
+
+    sink = ManifestServingSink(str(tmp_path / "live"))
+    rows = [("A", 1, dt.datetime(2024, 1, 1, 9, 30)), ("B", 2, dt.datetime(2024, 1, 2, 10, 0))]
+    sink(spark.createDataFrame(rows, "symbol string, number_shares long, last_seen timestamp"), 0)
+    live = LiveSnapshotQueryService(spark, sink)
+    batch = InteractiveQueryService(sink.read(spark))
+    for query in (KeyQuery("A"), RangeQuery("A", "B")):
+        resp = live.execute_response(query)
+        assert resp.error_message is None
+        assert sorted(resp.result, key=lambda r: r["symbol"]) == sorted(
+            batch.execute_response(query).result, key=lambda r: r["symbol"]
+        )
+        lines = resp.execution_info["stock-aggregation-state-store"]
+        assert lines[0] == "snapshot v0"
+        assert not any("key directories" in line for line in lines)

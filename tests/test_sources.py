@@ -200,3 +200,18 @@ def test_read_warc_records(spark, tmp_path):
         assert bytes(recs[0]["body"]).startswith(b"software")
     assert "bad.warc.gz" not in by_file  # corrupt gzip degrades
     assert len(by_file.get("trunc.warc", [])) == 2  # truncated tail dropped
+
+
+def test_load_table_memo_keeps_one_entry_per_path(spark, tmp_path):
+    # A table regenerated in place must be read afresh each time, and
+    # its stale plans must not pile up in the per-session memo.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafkastreamsinteractivequeries_spark.sources.tables import _TABLE_MEMO, load_table
+
+    before = len(_TABLE_MEMO.get(spark, {}))
+    for n in (1, 2, 3, 4):
+        pq.write_table(pa.table({"id": list(range(n))}), str(tmp_path / "regen.parquet"))
+        assert load_table(spark, str(tmp_path), "regen").count() == n
+    assert len(_TABLE_MEMO[spark]) == before + 1
