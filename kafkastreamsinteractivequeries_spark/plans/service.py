@@ -21,7 +21,6 @@ from kafkastreamsinteractivequeries_spark.plans.queries import (
     MultiKeyQuery,
     Query,
     QueryResponse,
-    RangeQuery,
 )
 
 
@@ -135,30 +134,30 @@ class LiveSnapshotQueryService(InteractiveQueryService):
     this: readers always see a complete committed snapshot, across
     stream restarts, because the manifest log survives the stream).
 
-    On a store on a local path, ``KeyQuery``, ``MultiKeyQuery`` and
-    ``RangeQuery`` (paged or not) are read in place on the driver, as
-    the reference reads its local store (``store/CustomQueryStore.java:36-66``):
-    one listing of the manifest directory finds the newest version, its
-    key index (built once per version) picks the keys' directories —
-    the route-to-owning-partition of ``StockController.java:364-375`` —
-    and pyarrow reads only those part files.  No Spark job runs, and at
-    most ``limit`` (page size + 1 for a page) keys are read.
-    ``FilteredRangeQuery``, the lazy ``execute``, stores on other file
-    systems and stores with a column that is not a str, bool, int or
-    float scan the version's Spark frame instead, built once per
-    version.  Either way a request reads one committed version, so it
-    never observes a partially-replaced key, successive reads only move
-    FORWARD through versions, and ``executionInfo`` names the version
-    served (``snapshot v<id>``); a driver read adds how many key
-    directories it read.
+    When Hadoop resolves the store's path to the local file system,
+    ``KeyQuery`` and ``MultiKeyQuery`` are read in place on the driver,
+    as the reference reads its local store
+    (``store/CustomQueryStore.java:36-66``): one listing of the manifest
+    directory finds the newest version, its key index (built once per
+    version) picks the keys' directories — the route-to-owning-partition
+    of ``StockController.java:364-375`` — and pyarrow reads only those
+    part files.  No Spark job runs, and at most ``limit`` keys are read.
+    Ranges (paged or not), ``FilteredRangeQuery``, the lazy ``execute``,
+    stores on other file systems and stores with a column that is not a
+    str, bool, int or float scan the version's Spark frame instead,
+    built once per version.  Either way a request reads one committed
+    version, so it never observes a partially-replaced key, successive
+    reads only move FORWARD through versions, and ``executionInfo``
+    names the version served (``snapshot v<id>``); a driver read adds
+    how many key directories it read.
     """
 
     def __init__(self, spark, sink, key_col: str = "symbol", store_name: str = "stock-aggregation-state-store"):
         self._spark = spark
         self._sink = sink
-        # keyed reads go to the driver reader when the query key is the
-        # key the sink lays out its directories by, on a local path
-        self._driver_reads = sink.local_root is not None and key_col == sink.partition_col
+        # key reads go to the driver reader when the query key is the
+        # key the sink lays out its directories by
+        self._driver_reads = key_col == sink.partition_col
         super().__init__(serving_df=None, key_col=key_col, store_name=store_name)
 
     def _execute_with_info(self, query: Query) -> tuple[DataFrame, list[str]]:
@@ -169,18 +168,12 @@ class LiveSnapshotQueryService(InteractiveQueryService):
     def _rows(
         self, query: Query, limit: int | None, paged: bool = False, after: str | None = None
     ) -> tuple[list[dict], list[str]]:
-        if self._driver_reads and isinstance(query, (KeyQuery, MultiKeyQuery, RangeQuery)):
+        if self._driver_reads and not paged and isinstance(query, (KeyQuery, MultiKeyQuery)):
             version = self._sink.latest_version(self._spark)
             if version is None:
                 raise FileNotFoundError(f"no committed manifest under {self._sink.path}")
-            if isinstance(query, RangeQuery):
-                keys, lower, upper = None, query.lower, query.upper
-            else:
-                keys = (query.key,) if isinstance(query, KeyQuery) else query.keys
-                lower = upper = None
-            got = self._sink.read_rows(
-                version, keys, lower, upper, after if paged else None, limit or None
-            )
+            keys = (query.key,) if isinstance(query, KeyQuery) else query.keys
+            got = self._sink.read_rows(self._spark, version, keys, limit or None)
             if got is not None:
                 rows, dirs = got
                 return rows, [f"snapshot v{version}", f"{dirs} key directories read"]

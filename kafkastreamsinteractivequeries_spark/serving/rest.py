@@ -27,10 +27,10 @@ whole routing layer collapses into ``InteractiveQueryService``.
 Scale note: REST reads hit the *serving* table, never the raw fact
 table.  Point ``InteractiveQueryService`` at a compacted aggregate, or
 serve the store the streaming upsert sink maintains
-(streaming/pipeline.py) through ``LiveSnapshotQueryService``: its key,
-multikey and range reads open only the picked keys' files on the
-driver and run no Spark job, so their cost follows the keys read, not
-ingest volume.
+(streaming/pipeline.py) through ``LiveSnapshotQueryService``: on a
+local store its key and multikey reads open only the picked keys'
+files on the driver and run no Spark job, so their cost follows the
+keys read, not ingest volume.
 
 A client error (a malformed predicate, limit or cursor, too many keys)
 is answered 400 with the error envelope; 500 is kept for server faults.

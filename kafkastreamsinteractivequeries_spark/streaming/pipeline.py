@@ -28,13 +28,11 @@ or ``LiveSnapshotQueryService``.
 
 from __future__ import annotations
 
-import bisect
 import json
 import os
 import re
 import threading
 from collections.abc import Iterable
-from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -138,25 +136,19 @@ def _refuse_foreign_checkpoint(store: str, committed: str, newest: int | None, b
         )
 
 
-def _local_path(path: str) -> str | None:
-    """``path`` on the local file system (``file:`` or no scheme), or
-    None when it names another file system (``hdfs:``, ``s3a:``, ...)."""
-    parts = urlsplit(path)
-    return os.path.abspath(parts.path) if parts.scheme in ("", "file") else None
-
-
 _ESCAPED = re.compile(r"%([0-9A-Fa-f]{2})")
 # the directory Spark writes for an empty-string (or null) partition value
 _DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _dir_key(name: str) -> str:
-    """The key of a ``_bucket=<name>`` directory: Hive's ``%XX``
-    unescape of Spark's partition-path escaping (``x%3Ay`` → ``x:y``).
-    The sink drops null keys, so the default partition holds ``""``."""
+def _dir_keys(name: str) -> tuple[str, ...]:
+    """The keys whose rows a ``_bucket=<name>`` directory holds: Hive's
+    ``%XX`` unescape of Spark's partition-path escaping (``x%3Ay`` →
+    ``x:y``).  Spark writes the empty key (the sink drops null keys) and
+    a key spelled like the default partition to the same directory."""
     if name == _DEFAULT_PARTITION:
-        return ""
-    return _ESCAPED.sub(lambda m: chr(int(m.group(1), 16)), name)
+        return ("", name)
+    return (_ESCAPED.sub(lambda m: chr(int(m.group(1), 16)), name),)
 
 
 def _plain(schema) -> bool:
@@ -173,43 +165,17 @@ def _plain(schema) -> bool:
 
 
 class _Version:
-    """One committed manifest and its key index: every key in Spark's
-    string order (UTF-8 bytes, which Python's code-point order of
-    ``str`` equals), aligned with the directory holding its rows."""
+    """One committed manifest and its key index: each key mapped to the
+    directory holding its rows."""
 
-    __slots__ = ("version", "files", "keys", "dirs", "by_key")
+    __slots__ = ("version", "files", "by_key", "plain")
 
     def __init__(self, version: int, files: dict[str, str]):
         self.version = version
         self.files = files
-        pairs = sorted((_dir_key(name), d) for name, d in files.items())
-        self.keys = [k for k, _ in pairs]
-        self.dirs = [d for _, d in pairs]
-        self.by_key = dict(pairs)
-
-    def pick(
-        self,
-        keys: Iterable[str] | None,
-        lower: str | None,
-        upper: str | None,
-        after: str | None,
-        limit: int | None,
-    ) -> list[tuple[str, str]]:
-        """(key, directory) of the keys a query reads, in key order, at
-        most ``limit``: the given ``keys``, else the inclusive range
-        [``lower``, ``upper``]; either way only keys above ``after``."""
-        if keys is not None:
-            picked = sorted((k, self.by_key[k]) for k in set(keys) if k in self.by_key)
-            if after is not None:
-                picked = [p for p in picked if p[0] > after]
-            return picked[:limit]
-        lo = 0 if lower is None else bisect.bisect_left(self.keys, lower)
-        if after is not None:
-            lo = max(lo, bisect.bisect_right(self.keys, after))
-        hi = len(self.keys) if upper is None else bisect.bisect_right(self.keys, upper)
-        if limit is not None:
-            hi = min(hi, lo + limit)
-        return list(zip(self.keys[lo:hi], self.dirs[lo:hi]))
+        self.by_key = {key: d for name, d in files.items() for key in _dir_keys(name)}
+        # False once a part file shows a column only Spark converts faithfully
+        self.plain = True
 
 
 class ManifestServingSink:
@@ -227,7 +193,8 @@ class ManifestServingSink:
     manifest via atomic rename; readers resolve the latest manifest and
     only ever see a complete, consistent snapshot.
 
-    Commit protocol (per micro-batch):
+    Commit protocol (per micro-batch), all through the Hadoop
+    FileSystem of the store's path:
 
     0. guard: list the manifest directory.  If ``manifest/v<id>.json``
        already exists the batch is a committed replay (restart
@@ -254,14 +221,15 @@ class ManifestServingSink:
        committer.)
 
     Read cost: every read lists the manifest directory once to find the
-    newest committed version (from Python on a local store, a Hadoop
-    glob elsewhere), so the first read after a commit already serves
-    it.  A version's manifest and key index are built once, and its
-    Spark frame (``read``) once per session, then reused until a newer
-    version commits; rows are never cached.  On a local store,
-    ``read_rows`` answers keys or a key range on the driver: it picks
-    the keys' directories from the index and reads only their part
-    files with pyarrow — no Spark job.
+    newest committed version, so the first read after a commit already
+    serves it.  A version's manifest and key index are built once, and
+    its Spark frame (``read``) once per session, then reused until a
+    newer version commits; rows are never cached.  When Hadoop resolves
+    the store's path to the local file system (decided once per
+    session), reads list and open its files from Python, and
+    ``read_rows`` answers a set of keys on the driver: the key index
+    picks their directories and pyarrow reads only those part files —
+    no Spark job.
 
     Scale: per-batch work ∝ updated keys (new files + one small JSON),
     and old snapshots remain readable until ``vacuum()`` — which only
@@ -271,9 +239,6 @@ class ManifestServingSink:
     def __init__(self, path: str, partition_col: str = "symbol"):
         self.path = path.rstrip("/")
         self.partition_col = partition_col
-        # where the store's files are on this host, or None when they
-        # are not on a local path (reads then go through Spark only)
-        self.local_root = _local_path(self.path)
         # _Version of the newest version read so far
         self._memo = None
         # (session, version, full frame) of the newest version read
@@ -283,6 +248,8 @@ class ManifestServingSink:
         # (session, FileSystem, Path class): py4j pays one round trip per
         # package segment of a class lookup
         self._jvm_refs = None
+        # (session, local directory of the store or None)
+        self._local = None
 
     def _manifest_dir(self) -> str:
         return f"{self.path}/manifest"
@@ -294,17 +261,21 @@ class ManifestServingSink:
             refs = self._jvm_refs = (spark, fs, jvm.org.apache.hadoop.fs.Path)
         return refs[1:]
 
-    def latest_version(self, spark: SparkSession) -> int | None:
-        """Id of the newest committed manifest, or None before the first
-        commit: one listing of the manifest directory."""
-        if self.local_root is not None:
-            try:
-                names = os.listdir(f"{self.local_root}/manifest")
-            except FileNotFoundError:
-                return None
-            # zero-padded names sort by version
-            newest = max((n for n in names if n[:1] == "v" and n.endswith(".json")), default=None)
-            return None if newest is None else int(newest[1:-5])
+    def _local_root(self, spark: SparkSession) -> str | None:
+        """The store's directory on this host when Hadoop resolves its
+        path to the local file system, else None (``hdfs:``, ``s3a:``,
+        or a scheme-less path under such a default file system)."""
+        local = self._local
+        if local is None or local[0] is not spark:
+            fs, path_cls = self._refs(spark)
+            root = None
+            if fs.getScheme() == "file":
+                root = fs.makeQualified(path_cls(self.path)).toUri().getPath().rstrip("/")
+            local = self._local = (spark, root)
+        return local[1]
+
+    def _committed_version(self, spark: SparkSession) -> int | None:
+        """Id of the newest committed manifest as Hadoop lists it."""
         fs, path_cls = self._refs(spark)
         found = fs.globStatus(path_cls(f"{self._manifest_dir()}/v[0-9]*.json"))
         if not found:
@@ -312,11 +283,31 @@ class ManifestServingSink:
         # globStatus sorts by name
         return int(found[len(found) - 1].getPath().getName()[1:-5])
 
-    def _manifest(self, spark: SparkSession, version: int) -> dict[str, str]:
-        path = f"{self._manifest_dir()}/v{version:020d}.json"
-        if self.local_root is not None:
-            with open(_local_path(path), encoding="utf-8") as fh:
+    def latest_version(self, spark: SparkSession) -> int | None:
+        """Id of the newest committed manifest, or None before the first
+        commit: one listing of the manifest directory."""
+        root = self._local_root(spark)
+        if root is None:
+            return self._committed_version(spark)
+        try:
+            names = os.listdir(f"{root}/manifest")
+        except FileNotFoundError:
+            return None
+        # zero-padded names sort by version
+        newest = max(
+            (n for n in names if n[:1] == "v" and n[1:2].isdigit() and n.endswith(".json")),
+            default=None,
+        )
+        return None if newest is None else int(newest[1:-5])
+
+    def _manifest(self, spark: SparkSession, version: int, local_root: str | None = None) -> dict[str, str]:
+        """Manifest ``version``: opened from Python under ``local_root``
+        when given, else through Hadoop."""
+        name = f"v{version:020d}.json"
+        if local_root is not None:
+            with open(f"{local_root}/manifest/{name}", encoding="utf-8") as fh:
                 return json.load(fh)
+        path = f"{self._manifest_dir()}/{name}"
         fs, jvm = _fs(spark, path)
         stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
         try:
@@ -328,14 +319,14 @@ class ManifestServingSink:
         return json.loads(data)
 
     def _latest_manifest(self, spark: SparkSession) -> dict[str, str]:
-        version = self.latest_version(spark)
+        version = self._committed_version(spark)
         return {} if version is None else self._manifest(spark, version)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.columns:
             return
         spark = batch_df.sparkSession
-        newest = self.latest_version(spark)
+        newest = self._committed_version(spark)
         _refuse_foreign_checkpoint(f"serving store {self.path}", "manifest", newest, batch_id)
         if newest == batch_id:
             return  # committed replay: its snapshot is already published
@@ -376,7 +367,7 @@ class ManifestServingSink:
         memo = self._memo
         if memo is not None and memo.version == version:
             return memo
-        files = self._manifest(spark, version)
+        files = self._manifest(spark, version, self._local_root(spark))
         if not files:
             raise FileNotFoundError(f"manifest v{version} under {self.path} is empty")
         built = _Version(version, files)
@@ -407,40 +398,42 @@ class ManifestServingSink:
         return df
 
     def read_rows(
-        self,
-        version: int,
-        keys: Iterable[str] | None = None,
-        lower: str | None = None,
-        upper: str | None = None,
-        after: str | None = None,
-        limit: int | None = None,
+        self, spark: SparkSession, version: int, keys: Iterable[str], limit: int | None = None
     ) -> tuple[list[dict], int] | None:
-        """Rows of committed ``version`` of a local store, read on the
-        driver: the rows of ``keys``, else of the inclusive key range
-        [``lower``, ``upper``]; only keys above ``after``; at most
-        ``limit`` rows, in key order.  Returns (row dicts in the files'
-        column order, number of key directories read), or None when
-        the files hold a column that is not a plain scalar (str, bool,
-        int, float), whose values only Spark converts faithfully.
+        """Rows of ``keys`` in committed ``version``, read on the
+        driver: at most ``limit`` keys' rows, in key order.  Returns
+        (row dicts in the files' column order, number of key
+        directories read), or None when the store is not on the local
+        file system, or its files hold a column that is not a plain
+        scalar (str, bool, int, float), whose values only Spark
+        converts faithfully: read those through ``read``.
 
-        Only the picked keys' part files are read, and each row is kept
-        only if its key is the key its directory was picked for."""
+        Only the keys' part files are read, and each row is kept only
+        if its key is the key its directory was picked for."""
+        root = self._local_root(spark)
+        if root is None:
+            return None
+        snap = self._version(spark, version)
+        if not snap.plain:
+            return None
         import pyarrow.parquet as pq  # loaded by the first driver read only
 
-        # a local store's manifest is read without the session
-        picked = self._version(None, version).pick(keys, lower, upper, after, limit)
+        picked = sorted((k, snap.by_key[k]) for k in set(keys) if k in snap.by_key)[:limit]
         col = self.partition_col
         rows: list[dict] = []
         for key, d in picked:
-            local = _local_path(d)
+            if not d.startswith(f"{self.path}/"):
+                return None  # written under another spelling of the path
+            local = root + d[len(self.path):]
             for name in sorted(os.listdir(local)):
                 if name[:1] in ("_", "."):
                     continue  # _SUCCESS, checksum files: not data (Spark skips them too)
-                table = pq.ParquetFile(f"{local}/{name}").read(use_threads=False)
-                if not _plain(table.schema):
+                part = pq.ParquetFile(f"{local}/{name}")
+                if not _plain(part.schema_arrow):
+                    snap.plain = False
                     return None
-                rows.extend(r for r in table.to_pylist() if r[col] == key)
-        return rows[:limit], len(picked)
+                rows.extend(r for r in part.read(use_threads=False).to_pylist() if r[col] == key)
+        return rows, len(picked)
 
     def vacuum(self, spark: SparkSession) -> list[str]:
         """Delete batch directories no current key references; returns

@@ -8,8 +8,8 @@
 2. ``to_json``/``from_json`` round-trips the transaction schema
    losslessly (the analog of ``SerdeUtilTest.java``).
 3. The live store's driver reader returns exactly what its Spark read
-   returns — rows, page cursors and snapshot version — for random
-   stores and random key, multikey, range and paged-range queries.
+   returns — rows and snapshot version — for random stores and random
+   key and multikey queries.
 """
 
 import math
@@ -351,9 +351,11 @@ def test_canonicalize_url_matches_python_reference(
 # Live store: the driver reader against the Spark read of the same snapshot
 # ---------------------------------------------------------------------------
 
-# unicode, escaped on disk (":", "/", "%", "="), the empty key, and keys
-# whose UTF-8 byte order differs from UTF-16 order ("｡" < "\U0001f600")
-LIVE_KEYS = ["", "A", "B", "a", "a b", "x:y", "x%y", "a/b", "=", "é", "日本", "｡", "\U0001f600"]
+# unicode, escaped on disk (":", "/", "%", "="), the empty key and the
+# key named like the directory Spark writes it to, and keys whose UTF-8
+# byte order differs from UTF-16 order ("｡" < "\U0001f600")
+LIVE_KEYS = ["", "__HIVE_DEFAULT_PARTITION__", "A", "B", "a", "a b", "x:y", "x%y", "a/b", "=",
+             "é", "日本", "｡", "\U0001f600"]
 
 
 def _spark_path_service(spark, sink):
@@ -382,16 +384,12 @@ def _version_of(resp) -> int:
     return int(line[len("snapshot v"):])
 
 
-_bound = st.one_of(st.none(), st.sampled_from(LIVE_KEYS), st.text(alphabet="AaBbx:é日\U0001f600", max_size=3))
-
-
 @settings(max_examples=8, deadline=None)
 @given(data=st.data())
 def test_live_driver_reads_match_spark_reads(spark, tmp_path_factory, data):
     from kafkastreamsinteractivequeries_spark.plans.queries import (
         KeyQuery,
         MultiKeyQuery,
-        RangeQuery,
     )
     from kafkastreamsinteractivequeries_spark.plans.service import LiveSnapshotQueryService
     from kafkastreamsinteractivequeries_spark.streaming.pipeline import ManifestServingSink
@@ -401,30 +399,25 @@ def test_live_driver_reads_match_spark_reads(spark, tmp_path_factory, data):
     driver = LiveSnapshotQueryService(spark, sink)
     via_spark = _spark_path_service(spark, sink)
     n_commits = data.draw(st.integers(1, 3), label="commits")
+    committed = set()
     for batch_id in range(n_commits):
         keys = data.draw(st.lists(st.sampled_from(LIVE_KEYS + [None]), min_size=1, max_size=8, unique=True))
         rows = [(k, float(batch_id), data.draw(st.floats(-1e6, 1e6)), batch_id * 100 + i)
                 for i, k in enumerate(keys)]
         sink(spark.createDataFrame(rows, schema), batch_id)
+        committed.update(k for k in keys if k is not None)
 
         def same(query):
             got, want = driver.execute_response(query), via_spark.execute_response(query)
-            assert got.error_message is None and want.error_message is None
+            assert got.error_message == want.error_message
+            if not committed:
+                # only null keys so far: the sink committed an empty
+                # manifest, which both paths refuse alike
+                assert "is empty" in got.error_message
+                return
+            assert got.error_message is None
             assert _version_of(got) == _version_of(want) == batch_id
             assert _typed(got.result) == _typed(sorted(want.result, key=lambda r: r["symbol"].encode())), query
 
         same(KeyQuery(data.draw(st.sampled_from(LIVE_KEYS), label="key")))
         same(MultiKeyQuery.with_keys(data.draw(st.lists(st.sampled_from(LIVE_KEYS + ["NOPE"]), max_size=6))))
-        same(RangeQuery(data.draw(_bound, label="lower"), data.draw(_bound, label="upper")))
-        query = RangeQuery(data.draw(_bound, label="page lower"), data.draw(_bound, label="page upper"))
-        page_size = data.draw(st.integers(1, 4), label="page size")
-        cursor, pages = None, 0
-        while True:
-            got, got_cursor = driver.execute_page(query, page_size, after=cursor)
-            want, want_cursor = via_spark.execute_page(query, page_size, after=cursor)
-            assert _version_of(got) == _version_of(want) == batch_id
-            assert (_typed(got.result), got_cursor) == (_typed(want.result), want_cursor), (query, cursor)
-            cursor, pages = got_cursor, pages + 1
-            if cursor is None:
-                break
-            assert pages <= len(LIVE_KEYS)

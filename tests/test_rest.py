@@ -427,11 +427,11 @@ def test_live_snapshot_memo_under_concurrent_commits(spark, tmp_path):
 
 
 def test_live_keyed_reads_run_no_spark_job(spark, tmp_path):
-    # Key, multikey, range and paged-range reads of a local live store
-    # are answered on the driver from the snapshot's files.  A filtered
-    # range still runs on Spark: its jobs, tagged with a second group,
-    # show the job tracking works, and since the status listener sees
-    # events in order, the first group is complete once they appear.
+    # Key and multikey reads of a local live store are answered on the
+    # driver from the snapshot's files.  Ranges still run on Spark:
+    # their jobs, tagged with a second group, show the job tracking
+    # works, and since the status listener sees events in order, the
+    # first group is complete once they appear.
     import time
 
     schema = "symbol string, buys double, sells double, number_shares long"
@@ -455,19 +455,74 @@ def test_live_keyed_reads_run_no_spark_job(spark, tmp_path):
         return r.get_json()
 
     driver = "live-driver-reads"
-    assert [r["symbol"] for r in get(driver, "/streams-iq/keyquery/x:y")["result"]] == ["x:y"]
+    body = get(driver, "/streams-iq/keyquery/x:y")
+    assert [r["symbol"] for r in body["result"]] == ["x:y"]
+    assert "1 key directories read" in body["executionInfo"]["stock-aggregation-state-store"]
     assert len(get(driver, "/streams-iq/multikey/A,C,NOPE")["result"]) == 2
-    assert len(get(driver, "/streams-iq/range?lower=B&upper=C")["result"]) == 2
-    page = get(driver, "/streams-iq/range?limit=2&after=A")
-    assert [r["symbol"] for r in page["result"]] == ["B", "C"] and page["nextCursor"] == "C"
 
     spark_group = "live-spark-reads"
-    assert len(get(spark_group, "/streams-iq/range?filter=@.buys > 1")["result"]) == 3
+    assert len(get(spark_group, "/streams-iq/range?lower=B&upper=C")["result"]) == 2
+    page = get(spark_group, "/streams-iq/range?limit=2&after=A")
+    assert [r["symbol"] for r in page["result"]] == ["B", "C"] and page["nextCursor"] == "C"
     deadline = time.monotonic() + 30
     while not tracker.getJobIdsForGroup(spark_group) and time.monotonic() < deadline:
         time.sleep(0.05)
     assert tracker.getJobIdsForGroup(spark_group)
     assert list(tracker.getJobIdsForGroup(driver)) == []
+
+
+def test_live_key_reads_split_the_default_partition_directory(spark, tmp_path):
+    # Spark writes the empty key and a key spelled like its default
+    # partition to one directory; a driver read returns each key's own
+    # rows, as the snapshot's Spark frame does.
+    from kafkastreamsinteractivequeries_spark.plans.queries import KeyQuery, MultiKeyQuery
+
+    schema = "symbol string, buys double, sells double, number_shares long"
+    literal = "__HIVE_DEFAULT_PARTITION__"
+    sink = ManifestServingSink(str(tmp_path / "live"))
+    sink(spark.createDataFrame([("", 1.0, 0.0, 1), (literal, 2.0, 0.0, 2), ("A", 3.0, 0.0, 3)], schema), 0)
+    live = LiveSnapshotQueryService(spark, sink)
+    frame = {r.symbol: r.asDict() for r in sink.read(spark).collect()}
+    for key in ("", literal):
+        resp = live.execute_response(KeyQuery(key))
+        assert resp.result == [frame[key]]
+        assert "1 key directories read" in resp.execution_info["stock-aggregation-state-store"]
+    assert live.execute_response(MultiKeyQuery.with_keys(["", literal])).result == [frame[""], frame[literal]]
+
+
+def test_live_store_locality_follows_the_default_file_system(spark, tmp_path):
+    # A scheme-less store path belongs to Hadoop's default file system,
+    # not to the local disk.  Under a viewfs default whose mount point
+    # does not exist locally, the sink must still see its own commits
+    # (each manifest carries the keys of earlier batches) and serve
+    # them, through Hadoop and Spark.
+    from kafkastreamsinteractivequeries_spark.plans.queries import KeyQuery, RangeQuery
+
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    mount, real = "/ksiq-viewfs-mount", tmp_path / "real"
+    real.mkdir()
+    link = f"fs.viewfs.mounttable.ksiq-{tmp_path.name}.link.{mount}"
+    default_fs = conf.get("fs.defaultFS")
+    conf.set(link, real.as_uri())
+    conf.set("fs.defaultFS", f"viewfs://ksiq-{tmp_path.name}/")
+    try:
+        schema = "symbol string, buys double, sells double, number_shares long"
+        sink = ManifestServingSink(f"{mount}/store")
+        sink(spark.createDataFrame([("A", 1.0, 0.0, 1), ("B", 2.0, 0.0, 2)], schema), 0)
+        sink(spark.createDataFrame([("A", 3.0, 0.0, 3)], schema), 1)
+        assert sink.latest_version(spark) == 1
+        live = LiveSnapshotQueryService(spark, sink)
+        resp = live.execute_response(KeyQuery("B"))
+        assert resp.error_message is None and [r["number_shares"] for r in resp.result] == [2]
+        assert resp.execution_info["stock-aggregation-state-store"][0] == "snapshot v1"
+        resp = live.execute_response(RangeQuery())
+        assert {r["symbol"]: r["number_shares"] for r in resp.result} == {"A": 3, "B": 2}
+    finally:
+        conf.set("fs.defaultFS", default_fs)
+        conf.unset(link)
+    assert sorted(p.name for p in (real / "store" / "manifest").glob("v*.json")) == [
+        f"v{v:020d}.json" for v in (0, 1)
+    ]
 
 
 def test_live_snapshots_fold_batches_over_non_null_keys(spark, tmp_path):
@@ -503,20 +558,27 @@ def test_live_snapshots_fold_batches_over_non_null_keys(spark, tmp_path):
         assert sorted(got) == sorted(fold.items()), version
 
 
-def test_live_store_with_non_scalar_column_reads_through_spark(spark, tmp_path):
+def test_live_store_with_non_scalar_column_reads_through_spark(spark, tmp_path, monkeypatch):
     # Arrow and Spark convert timestamps differently, so a store whose
     # files hold one is served by the Spark frame: the same rows as the
-    # batch service over that frame, no driver-read line.
+    # batch service over that frame, no driver-read line.  The first
+    # driver read that finds such a column marks the version, so later
+    # requests go to Spark without opening its files.
     import datetime as dt
 
-    from kafkastreamsinteractivequeries_spark.plans.queries import KeyQuery, RangeQuery
+    import pyarrow.parquet as pq
+
+    from kafkastreamsinteractivequeries_spark.plans.queries import KeyQuery, MultiKeyQuery
 
     sink = ManifestServingSink(str(tmp_path / "live"))
     rows = [("A", 1, dt.datetime(2024, 1, 1, 9, 30)), ("B", 2, dt.datetime(2024, 1, 2, 10, 0))]
     sink(spark.createDataFrame(rows, "symbol string, number_shares long, last_seen timestamp"), 0)
     live = LiveSnapshotQueryService(spark, sink)
     batch = InteractiveQueryService(sink.read(spark))
-    for query in (KeyQuery("A"), RangeQuery("A", "B")):
+    opened = []
+    parquet_file = pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile", lambda *a, **kw: opened.append(a) or parquet_file(*a, **kw))
+    for query in (KeyQuery("A"), MultiKeyQuery.with_keys(["A", "B"]), KeyQuery("B")):
         resp = live.execute_response(query)
         assert resp.error_message is None
         assert sorted(resp.result, key=lambda r: r["symbol"]) == sorted(
@@ -525,3 +587,4 @@ def test_live_store_with_non_scalar_column_reads_through_spark(spark, tmp_path):
         lines = resp.execution_info["stock-aggregation-state-store"]
         assert lines[0] == "snapshot v0"
         assert not any("key directories" in line for line in lines)
+    assert len(opened) == 1
