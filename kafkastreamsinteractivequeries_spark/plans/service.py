@@ -14,22 +14,141 @@ objects against it.  Routing/scatter-gather/standby code disappears —
 
 from __future__ import annotations
 
+import threading
+from bisect import bisect_left, bisect_right
+
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StringType
 
 from kafkastreamsinteractivequeries_spark.plans.queries import (
     KeyQuery,
     MultiKeyQuery,
     Query,
     QueryResponse,
+    RangeQuery,
 )
+from kafkastreamsinteractivequeries_spark.streaming.pipeline import _plain
+
+
+def _snapshot_fits(df: DataFrame, key_col: str) -> bool:
+    """True when ``df`` can be served from a driver snapshot: its key
+    column is a plain ``StringType`` (compared byte-wise, as the
+    snapshot bisects) and every column passes the sink's ``_plain``
+    rule, so ``to_pylist`` rows equal a Spark ``collect``'s."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if key_col not in df.columns or df.schema[key_col].dataType != StringType():
+        return False
+    try:
+        return _plain(to_arrow_schema(df.schema))
+    except TypeError:  # a type Arrow does not carry
+        return False
+
+
+class _DriverSnapshot:
+    """All rows of a serving frame, collected once and held on the
+    driver in key order, as IQv2 iterates its byte-sorted local store
+    (``store/StoreDelegate.java:77-94``): null keys first, then UTF-8
+    byte order, which is Spark's string order and Python's ``str``
+    order.  Range reads bisect ``keys`` and convert only their slice of
+    ``table``; any other query runs Spark's own semantics over
+    ``frame()``, the same rows handed back to Spark on the first such
+    query."""
+
+    __slots__ = ("table", "nulls", "keys", "_df", "_frame", "_frame_lock")
+
+    def __init__(self, df: DataFrame, key_col: str):
+        import pyarrow.compute as pc
+
+        table = df.toArrow()
+        order = pc.sort_indices(table, sort_keys=[(key_col, "ascending")], null_placement="at_start")
+        self.table = table.take(order)
+        keys = self.table.column(key_col)
+        self.nulls = keys.null_count
+        self.keys = keys.to_pylist()[self.nulls:]
+        self._df = df  # the session and schema ``frame`` is built with
+        self._frame: DataFrame | None = None
+        self._frame_lock = threading.Lock()
+
+    def frame(self) -> DataFrame:
+        """``table`` as a Spark frame, built once.  It copies the rows
+        into the driver JVM: as a ``LocalRelation``, which Catalyst
+        filters and limits on the driver without a job, while the Arrow
+        batches stay under ``spark.sql.execution.arrow.localRelationThreshold``
+        (48 MB by default), and above it as an RDD of the batches, which
+        each query scans with a Spark job."""
+        if self._frame is None:
+            with self._frame_lock:
+                if self._frame is None:
+                    self._frame = self._df.sparkSession.createDataFrame(self.table, self._df.schema)
+        return self._frame
+
+    def _span(self, query: Query) -> tuple[int, int] | None:
+        """Row positions ``[start, stop)`` of a range query, in key
+        order; None for any other query."""
+        if not isinstance(query, RangeQuery):
+            return None
+        if query.lower is None and query.upper is None:
+            return 0, self.table.num_rows  # unbounded: null keys too
+        base, keys = self.nulls, self.keys
+        return (
+            base + (0 if query.lower is None else bisect_left(keys, query.lower)),
+            base + (len(keys) if query.upper is None else bisect_right(keys, query.upper)),
+        )
+
+    def rows(self, query: Query, key_col: str, limit: int | None, after: str | None) -> list[dict]:
+        """At most ``limit`` (falsy: all) rows of ``query`` with a key
+        above ``after`` (None: every key, null keys too), in key order."""
+        span = self._span(query)
+        if span is None:
+            df = query.apply(self.frame(), key_col=key_col)
+            if after is not None:
+                df = df.filter(F.col(key_col) > after)
+            # a filter keeps the frame's key order, so a page needs no
+            # sort (which would run a job)
+            rows = df.limit(limit).collect() if limit else df.collect()
+            return [r.asDict() for r in rows]
+        start, stop = span
+        if after is not None:
+            start = max(start, self.nulls + bisect_right(self.keys, after))
+        n = stop - start if not limit else min(stop - start, limit)
+        return self.table.slice(start, n).to_pylist() if n > 0 else []
 
 
 class InteractiveQueryService:
+    """Serves a batch frame: a materialized aggregate that does not
+    change while it is served (a store that changes is served by
+    ``LiveSnapshotQueryService``).
+
+    The first ``execute_response`` or ``execute_page`` takes one driver
+    snapshot of ``serving_df``: a single Arrow collect, bounded by
+    Spark's own ``spark.driver.maxResultSize``, with the rows sorted by
+    key.  Later range reads and their keyset pages bisect it with no
+    Spark job.  Key, multikey and filtered reads run Spark's own
+    semantics over the same rows, handed back to Spark once by the
+    first of them, so every query type reads one snapshot.  That copy
+    doubles the rows' driver memory (Arrow in Python, rows in the JVM),
+    and it reads without a job only while its Arrow batches stay under
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default); above that each such read runs a Spark job over the
+    driver's batches.  A frame whose key column is not a string, or
+    with a column that is not a str, bool, int or float, and a frame
+    that Spark refuses to collect as too large or that does not fit
+    the Python heap, are served by scanning ``serving_df`` per request
+    instead.  ``executionInfo`` names what was read: ``driver snapshot
+    of N rows`` or ``spark frame``.  The lazy ``execute`` always
+    composes on ``serving_df``.
+    """
+
     def __init__(self, serving_df: DataFrame, key_col: str = "symbol", store_name: str = "stock-aggregation-state-store"):
         self.serving_df = serving_df
         self.key_col = key_col
         # store name kept for API parity — reference application.properties:4
         self.store_name = store_name
+        self._snapshot: _DriverSnapshot | None = None
+        # True once the frame is known not to fit a driver snapshot
+        self._on_frame = False
+        self._snapshot_lock = threading.Lock()
 
     def execute(self, query: Query) -> DataFrame:
         return self._execute_with_info(query)[0]
@@ -39,6 +158,30 @@ class InteractiveQueryService:
         what it reads (subclasses add the snapshot they resolved)."""
         return query.apply(self.serving_df, key_col=self.key_col), []
 
+    def _driver_snapshot(self) -> _DriverSnapshot | None:
+        """The snapshot of ``serving_df``, built by the first caller
+        while the others wait; None when the frame is served by Spark.
+        A build that fails for any reason but a frame too large for the
+        driver raises, and the next call builds again."""
+        if self._snapshot is not None or self._on_frame:
+            return self._snapshot
+        with self._snapshot_lock:
+            if self._snapshot is not None or self._on_frame:
+                return self._snapshot
+            if not _snapshot_fits(self.serving_df, self.key_col):
+                self._on_frame = True
+                return None
+            try:
+                self._snapshot = _DriverSnapshot(self.serving_df, self.key_col)
+            except Exception as exc:
+                # too large for the driver: Spark refused the collect,
+                # naming its bound in the error (a Py4JJavaError from
+                # the collect's result), or the Python heap ran out
+                if not isinstance(exc, MemoryError) and "spark.driver.maxResultSize" not in str(exc):
+                    raise
+                self._on_frame = True
+            return self._snapshot
+
     def _rows(
         self, query: Query, limit: int | None, paged: bool = False, after: str | None = None
     ) -> tuple[list[dict], list[str]]:
@@ -47,13 +190,24 @@ class InteractiveQueryService:
         ``paged`` orders by key and keeps only keys above ``after``: the
         keyset page of ``execute_page``.  The one hook a subclass
         overrides to read rows another way."""
-        df, info = self._execute_with_info(query)
+        snap = self._driver_snapshot()
+        if snap is None:
+            return self._frame_rows(self._execute_with_info(query), limit, paged, after)
+        rows = snap.rows(query, self.key_col, limit, after if paged else None)
+        return rows, [f"driver snapshot of {snap.table.num_rows} rows"]
+
+    def _frame_rows(
+        self, frame: tuple[DataFrame, list[str]], limit: int | None, paged: bool = False, after: str | None = None
+    ) -> tuple[list[dict], list[str]]:
+        """``_rows`` read by a Spark job over ``frame``, the query's
+        frame and info lines from ``_execute_with_info``."""
+        df, info = frame
         if paged:
             if after is not None:
                 df = df.filter(F.col(self.key_col) > after)
             df = df.orderBy(self.key_col)
         rows = df.limit(limit).collect() if limit else df.collect()
-        return [r.asDict() for r in rows], info
+        return [r.asDict() for r in rows], info + ["spark frame"]
 
     #: default collect cap for ``execute_response`` — matches the REST
     #: layer's cap; an unlimited default is a driver-OOM invitation at
@@ -92,12 +246,13 @@ class InteractiveQueryService:
         ``page_size``.  Returns (response, next_cursor) — next_cursor
         is the last key of the page when more rows exist, else None.
 
-        Scale shape: the cursor predicate ANDs into the scan (same
-        pushdown as the range bounds) and ``orderBy().limit(n+1)``
-        compiles to TakeOrderedAndProject — the driver materializes at
-        most page_size+1 rows per call no matter how many million rows
-        the range matches, which is what lets the REST layer serve
-        unbounded range scans without unbounded collects.
+        Scale shape: the response holds at most page_size+1 rows no
+        matter how many rows the range matches.  From the driver
+        snapshot the cursor is one more bisect and only the page's rows
+        are converted.  On a Spark frame the cursor predicate ANDs into
+        the scan (same pushdown as the range bounds) and
+        ``orderBy().limit(n+1)`` compiles to TakeOrderedAndProject, so
+        the driver collects at most page_size+1 rows per call.
         """
         if page_size < 1:
             # a non-positive page would return an empty page with no
@@ -149,7 +304,8 @@ class LiveSnapshotQueryService(InteractiveQueryService):
     version, so it never observes a partially-replaced key, successive
     reads only move FORWARD through versions, and ``executionInfo``
     names the version served (``snapshot v<id>``); a driver read adds
-    how many key directories it read.
+    how many key directories it read, a scan adds ``spark frame``.  A
+    version that holds no key yet answers every query with no rows.
     """
 
     def __init__(self, spark, sink, key_col: str = "symbol", store_name: str = "stock-aggregation-state-store"):
@@ -160,21 +316,30 @@ class LiveSnapshotQueryService(InteractiveQueryService):
         self._driver_reads = key_col == sink.partition_col
         super().__init__(serving_df=None, key_col=key_col, store_name=store_name)
 
-    def _execute_with_info(self, query: Query) -> tuple[DataFrame, list[str]]:
-        version = self._sink.latest_version(self._spark)
+    def _execute_with_info(self, query: Query, version: int | None = None) -> tuple[DataFrame, list[str]]:
+        """The query's frame over committed ``version`` (default: the
+        newest)."""
+        if version is None:
+            version = self._sink.latest_version(self._spark)
         df = self._sink.read(self._spark, version=version)
         return query.apply(df, key_col=self.key_col), [f"snapshot v{version}"]
 
     def _rows(
         self, query: Query, limit: int | None, paged: bool = False, after: str | None = None
     ) -> tuple[list[dict], list[str]]:
+        version = self._sink.latest_version(self._spark)
+        if version is None:
+            raise FileNotFoundError(f"no committed manifest under {self._sink.path}")
+        if self._sink.is_empty(self._spark, version):
+            # no key committed yet (every row so far had a null key):
+            # there is no file to scan and every answer is empty, but a
+            # malformed predicate is still refused
+            query.predicate_on(self.key_col)
+            return [], [f"snapshot v{version}"]
         if self._driver_reads and not paged and isinstance(query, (KeyQuery, MultiKeyQuery)):
-            version = self._sink.latest_version(self._spark)
-            if version is None:
-                raise FileNotFoundError(f"no committed manifest under {self._sink.path}")
             keys = (query.key,) if isinstance(query, KeyQuery) else query.keys
             got = self._sink.read_rows(self._spark, version, keys, limit or None)
             if got is not None:
                 rows, dirs = got
                 return rows, [f"snapshot v{version}", f"{dirs} key directories read"]
-        return super()._rows(query, limit, paged, after)
+        return self._frame_rows(self._execute_with_info(query, version), limit, paged, after)

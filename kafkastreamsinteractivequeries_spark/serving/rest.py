@@ -25,12 +25,17 @@ DataFrame query is already distributed and fault-tolerant, so the
 whole routing layer collapses into ``InteractiveQueryService``.
 
 Scale note: REST reads hit the *serving* table, never the raw fact
-table.  Point ``InteractiveQueryService`` at a compacted aggregate, or
-serve the store the streaming upsert sink maintains
-(streaming/pipeline.py) through ``LiveSnapshotQueryService``: on a
-local store its key and multikey reads open only the picked keys'
-files on the driver and run no Spark job, so their cost follows the
-keys read, not ingest volume.
+table.  Point ``InteractiveQueryService`` at a compacted aggregate that
+does not change while it is served: its first request takes a driver
+snapshot of the frame (one collect, bounded by Spark's
+``spark.driver.maxResultSize``; a frame Spark refuses is scanned per
+request instead), later ranges and pages run no Spark job, and key,
+multikey and filtered reads run none while the snapshot stays under
+``spark.sql.execution.arrow.localRelationThreshold``.  Serve the store
+the streaming upsert sink maintains (streaming/pipeline.py) through
+``LiveSnapshotQueryService``: on a local store its key and multikey
+reads open only the picked keys' files on the driver and run no Spark
+job, so their cost follows the keys read, not ingest volume.
 
 A client error (a malformed predicate, limit or cursor, too many keys)
 is answered 400 with the error envelope; 500 is kept for server faults.

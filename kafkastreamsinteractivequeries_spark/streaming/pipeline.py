@@ -211,7 +211,9 @@ class ManifestServingSink:
        ``data/batch-<id>/_bucket=<key>/`` (fresh directory — never
        mutated after commit; a replay of a batch whose manifest never
        landed rewrites the directory before any manifest references
-       it).
+       it).  The empty key and a key spelled ``__HIVE_DEFAULT_PARTITION__``
+       share one directory, so a batch that writes it also copies the
+       other key's rows from the previous snapshot's directory.
     2. manifest: merge {key → data dir} over the previous snapshot and
        write ``manifest/v<id>.json`` via temp-file + rename.  Rename of
        a closed file to a NEW name is the atomic commit primitive on
@@ -332,10 +334,14 @@ class ManifestServingSink:
             return  # committed replay: its snapshot is already published
         out = f"{self.path}/data/batch-{batch_id}"
         # _bucket duplicates the key into the directory layout while the
-        # data files keep the real column — leaf dirs stay self-contained
+        # data files keep the real column — leaf dirs stay self-contained.
+        # Spark writes the empty key and the literal default-partition
+        # name to one directory; as two partition values one task would
+        # open two files of the same name there, so both get "".
+        key = F.col(self.partition_col)
         (
-            batch_df.filter(F.col(self.partition_col).isNotNull())
-            .withColumn("_bucket", F.col(self.partition_col))
+            batch_df.filter(key.isNotNull())
+            .withColumn("_bucket", F.when(key == _DEFAULT_PARTITION, F.lit("")).otherwise(key))
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(out)
@@ -347,6 +353,8 @@ class ManifestServingSink:
             if st.getPath().getName().startswith("_bucket=")
         }
         snapshot = {} if newest is None else self._manifest(spark, newest)
+        if _DEFAULT_PARTITION in written and _DEFAULT_PARTITION in snapshot:
+            self._carry_shared_directory(spark, snapshot[_DEFAULT_PARTITION], written[_DEFAULT_PARTITION])
         snapshot.update(written)
 
         mdir = self._manifest_dir()
@@ -361,26 +369,45 @@ class ManifestServingSink:
         if not fs.rename(tmp, final) and not fs.exists(final):
             raise IOError(f"manifest commit failed for batch {batch_id}")
 
+    def _carry_shared_directory(self, spark: SparkSession, old: str, new: str) -> None:
+        """Spark writes the empty key and a key spelled like its default
+        partition to one directory, so a batch that wrote it for one of
+        the two keys appends the other's rows from ``old``, the previous
+        snapshot's directory, to ``new`` before the manifest commits."""
+        col = F.col(self.partition_col)
+
+        def keys(path: str) -> set:
+            return {r[0] for r in spark.read.parquet(path).select(col).distinct().collect()}
+
+        # a store written before null keys were dropped keeps them here
+        carried = keys(old) - keys(new) - {None}
+        if carried:
+            spark.read.parquet(old).filter(col.isin(sorted(carried))).write.mode("append").parquet(new)
+
     def _version(self, spark: SparkSession, version: int) -> _Version:
         """Manifest and key index of ``version``, built once; only a
         newer version replaces the memo."""
         memo = self._memo
         if memo is not None and memo.version == version:
             return memo
-        files = self._manifest(spark, version, self._local_root(spark))
-        if not files:
-            raise FileNotFoundError(f"manifest v{version} under {self.path} is empty")
-        built = _Version(version, files)
+        built = _Version(version, self._manifest(spark, version, self._local_root(spark)))
         with self._memo_lock:
             cur = self._memo
             if cur is None or cur.version < version:
                 self._memo = built
         return built
 
+    def is_empty(self, spark: SparkSession, version: int) -> bool:
+        """True when committed ``version`` holds no key: every batch up
+        to it had no row with a non-null key."""
+        return not self._version(spark, version).files
+
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Committed snapshot ``version`` (default: the newest) of the
         serving table as a Spark frame, built once per (version,
-        session)."""
+        session).  A version that holds no key has no file to take a
+        schema from, so it raises ``FileNotFoundError`` like a store
+        with no commit."""
         if version is None:
             version = self.latest_version(spark)
         if version is None:
@@ -389,6 +416,9 @@ class ManifestServingSink:
         if frame is not None and frame[0] is spark and frame[1] == version:
             return frame[2]
         files = self._version(spark, version).files
+        if not files:
+            # no data file, so no schema to build a frame from
+            raise FileNotFoundError(f"manifest v{version} under {self.path} holds no keys")
         df = spark.read.parquet(*sorted(set(files.values())))
         df = df.drop("_bucket") if "_bucket" in df.columns else df
         with self._memo_lock:

@@ -10,6 +10,9 @@
 3. The live store's driver reader returns exactly what its Spark read
    returns — rows and snapshot version — for random stores and random
    key and multikey queries.
+4. The batch service's driver snapshot returns exactly what its lazy
+   Spark path returns, for random frames and random key, multikey,
+   range and filtered queries, unpaged and paged.
 """
 
 import math
@@ -359,17 +362,13 @@ LIVE_KEYS = ["", "__HIVE_DEFAULT_PARTITION__", "A", "B", "a", "a b", "x:y", "x%y
 
 
 def _spark_path_service(spark, sink):
-    """The live service with the base class's row hook: every query
-    scans the snapshot's Spark frame."""
-    from kafkastreamsinteractivequeries_spark.plans.service import (
-        InteractiveQueryService,
-        LiveSnapshotQueryService,
-    )
+    """The live service with its driver reader off: every query scans
+    the snapshot's Spark frame."""
+    from kafkastreamsinteractivequeries_spark.plans.service import LiveSnapshotQueryService
 
-    class SparkPath(LiveSnapshotQueryService):
-        _rows = InteractiveQueryService._rows
-
-    return SparkPath(spark, sink)
+    svc = LiveSnapshotQueryService(spark, sink)
+    svc._driver_reads = False
+    return svc
 
 
 def _typed(rows) -> list[list[tuple]]:
@@ -399,25 +398,129 @@ def test_live_driver_reads_match_spark_reads(spark, tmp_path_factory, data):
     driver = LiveSnapshotQueryService(spark, sink)
     via_spark = _spark_path_service(spark, sink)
     n_commits = data.draw(st.integers(1, 3), label="commits")
-    committed = set()
     for batch_id in range(n_commits):
         keys = data.draw(st.lists(st.sampled_from(LIVE_KEYS + [None]), min_size=1, max_size=8, unique=True))
         rows = [(k, float(batch_id), data.draw(st.floats(-1e6, 1e6)), batch_id * 100 + i)
                 for i, k in enumerate(keys)]
         sink(spark.createDataFrame(rows, schema), batch_id)
-        committed.update(k for k in keys if k is not None)
 
         def same(query):
+            # while every key so far was null the manifest is empty,
+            # and both paths answer it with no rows
             got, want = driver.execute_response(query), via_spark.execute_response(query)
-            assert got.error_message == want.error_message
-            if not committed:
-                # only null keys so far: the sink committed an empty
-                # manifest, which both paths refuse alike
-                assert "is empty" in got.error_message
-                return
-            assert got.error_message is None
+            assert got.error_message is None and want.error_message is None
             assert _version_of(got) == _version_of(want) == batch_id
             assert _typed(got.result) == _typed(sorted(want.result, key=lambda r: r["symbol"].encode())), query
 
         same(KeyQuery(data.draw(st.sampled_from(LIVE_KEYS), label="key")))
         same(MultiKeyQuery.with_keys(data.draw(st.lists(st.sampled_from(LIVE_KEYS + ["NOPE"]), max_size=6))))
+
+
+# ---------------------------------------------------------------------------
+# Batch service: the driver snapshot against the lazy Spark path
+# ---------------------------------------------------------------------------
+
+SNAPSHOT_SCHEMA = "symbol string, f float, g double, i int, b boolean"
+# well-formed over the frame, then a malformed one (400) and one naming
+# an unknown column (AnalysisException)
+SNAPSHOT_PREDICATES = [
+    "@.f > 0", "@.i < 3 && @.b == true", "@.symbol == 'a'", "@.f >= @.g",
+    "!(@.b == true) || @.i == 2", "@.symbol > 'B'", "@.g == null", "@.f >", "@.nope > 1",
+]
+
+
+def _multiset(rows):
+    from collections import Counter
+
+    return Counter(repr(r) for r in _typed(rows))
+
+
+def _same_refusal(got, want) -> bool:
+    """True when both refused the query, False when both answered: a
+    malformed predicate gets the same client error from each, an
+    unknown column an error naming each one's own plan."""
+    assert (got.error_message is None) == (want.error_message is None), (got.error_message, want.error_message)
+    assert got.client_error == want.client_error
+    if got.client_error:
+        assert got.error_message == want.error_message
+    return got.error_message is not None
+
+
+@settings(max_examples=12, deadline=None)
+@given(data=st.data())
+def test_batch_snapshot_reads_match_lazy_reads(spark, data):
+    from kafkastreamsinteractivequeries_spark.plans.queries import (
+        FilteredRangeQuery,
+        KeyQuery,
+        MultiKeyQuery,
+        RangeQuery,
+    )
+    from kafkastreamsinteractivequeries_spark.plans.service import InteractiveQueryService
+
+    class Lazy(InteractiveQueryService):
+        def _rows(self, query, *args, **kwargs):
+            return self._frame_rows(self._execute_with_info(query), *args, **kwargs)
+
+    bounds = st.none() | st.sampled_from(LIVE_KEYS + ["NOPE"])
+    rows = data.draw(st.lists(st.tuples(
+        st.sampled_from(LIVE_KEYS + [None] * 3),  # repeats: duplicate keys
+        st.none() | st.floats(width=32),
+        st.none() | st.floats(),
+        st.none() | st.integers(-2**31, 2**31 - 1),
+        st.none() | st.booleans(),
+    ), max_size=14), label="rows")
+    df = spark.createDataFrame(rows, SNAPSHOT_SCHEMA).repartition(3)
+    snap, lazy = InteractiveQueryService(df), Lazy(df)
+    with_key = {}
+    for r in (r.asDict() for r in df.collect()):
+        with_key.setdefault(r["symbol"], []).append(r)
+
+    def same_pages(query, size, after):
+        for _ in range(len(rows) + 2):
+            (got, got_next), (want, want_next) = snap.execute_page(query, size, after), lazy.execute_page(query, size, after)
+            if _same_refusal(got, want):
+                return
+            # pages in key order; the rows of the page's last key may be
+            # any of that key's rows when the page is full
+            assert [r["symbol"] for r in got.result] == [r["symbol"] for r in want.result], (query, after)
+            edge = got.result[-1]["symbol"] if len(got.result) == size else object()
+            assert _multiset([r for r in got.result if r["symbol"] != edge]) == _multiset(
+                [r for r in want.result if r["symbol"] != edge]
+            ), (query, after)
+            assert _multiset([r for r in got.result if r["symbol"] == edge]) <= _multiset(with_key.get(edge, []))
+            assert got_next == want_next
+            if got_next is None:
+                return
+            after = got_next
+
+    def same_rows(query, limit):
+        got, want = snap.execute_response(query, collect_limit=limit), lazy.execute_response(query, collect_limit=limit)
+        if _same_refusal(got, want):
+            return
+        assert got.execution_info["stock-aggregation-state-store"][0] == f"driver snapshot of {len(rows)} rows"
+        full = lazy.execute_response(query, collect_limit=None).result
+        if limit and len(full) > limit:
+            # a capped answer may be any ``limit`` of the rows
+            assert len(got.result) == limit and _multiset(got.result) <= _multiset(full), query
+        else:
+            assert _multiset(got.result) == _multiset(want.result), query
+
+    # the only reads that return null keys, then random ones
+    same_rows(RangeQuery(), None)
+    same_pages(RangeQuery(), 2, None)
+    for _ in range(5):
+        kind = data.draw(st.sampled_from(["key", "multikey", "range", "filtered"]), label="kind")
+        lower, upper = data.draw(bounds, label="lower"), data.draw(bounds, label="upper")
+        if kind == "key":
+            query = KeyQuery(data.draw(st.sampled_from(LIVE_KEYS + ["NOPE"]), label="key"))
+        elif kind == "multikey":
+            query = MultiKeyQuery.with_keys(data.draw(st.lists(st.sampled_from(LIVE_KEYS + ["NOPE"]), max_size=5)))
+        elif kind == "range":
+            query = RangeQuery(lower, upper)
+        else:
+            query = FilteredRangeQuery(lower, upper, data.draw(st.sampled_from(SNAPSHOT_PREDICATES), label="pred"))
+        if data.draw(st.booleans(), label="paged"):
+            cursor = data.draw(st.none() | st.sampled_from(LIVE_KEYS + ["NOPE"]), label="cursor")
+            same_pages(query, data.draw(st.integers(1, 5), label="page size"), cursor)
+        else:
+            same_rows(query, data.draw(st.sampled_from([None, 1, 3, 10_000]), label="collect_limit"))

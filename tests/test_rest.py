@@ -588,3 +588,76 @@ def test_live_store_with_non_scalar_column_reads_through_spark(spark, tmp_path, 
         assert lines[0] == "snapshot v0"
         assert not any("key directories" in line for line in lines)
     assert len(opened) == 1
+
+
+@pytest.mark.parametrize("later", ["", "__HIVE_DEFAULT_PARTITION__"])
+def test_live_snapshots_keep_both_keys_of_the_default_partition_directory(spark, tmp_path, later):
+    # Spark writes the empty key and a key spelled like its default
+    # partition to one directory.  One task must write both (a single
+    # partition holds batch 0), and a batch that updates one of the two
+    # rewrites that directory and must carry the other key's rows over:
+    # every version is the upsert fold, read through Spark and through
+    # the driver reader alike.
+    schema = "symbol string, number_shares long"
+    literal = "__HIVE_DEFAULT_PARTITION__"
+    batches = [[("", 1), (literal, 2), ("A", 3)], [(later, 10)], [("A", 30)]]
+    sink = ManifestServingSink(str(tmp_path / "live"))
+    fold: dict = {}
+    for version, batch in enumerate(batches):
+        sink(spark.createDataFrame(batch, schema).coalesce(1), version)
+        fold.update(batch)
+        want = sorted(fold.items())
+        assert sorted((r.symbol, r.number_shares) for r in sink.read(spark, version=version).collect()) == want
+        rows, _ = sink.read_rows(spark, version, ["", literal, "A"])
+        assert [(r["symbol"], r["number_shares"]) for r in rows] == want, version
+
+
+def test_live_store_with_no_key_yet_answers_empty(spark, tmp_path):
+    # A first batch whose keys are all null commits a manifest that
+    # holds no key: reads answer no rows and name the version, and a
+    # malformed predicate is still the client's error.
+    schema = "symbol string, buys double, sells double, number_shares long"
+    sink = ManifestServingSink(str(tmp_path / "live"))
+    sink(spark.createDataFrame([(None, 1.0, 0.0, 1)], schema), 0)
+    app = create_app(LiveSnapshotQueryService(spark, sink))
+    app.config["TESTING"] = True
+    c = app.test_client()
+    for url in ("/streams-iq/keyquery/A", "/streams-iq/multikey/A,B", "/streams-iq/range",
+                "/streams-iq/range?limit=2", "/streams-iq/range?filter=@.buys > 0"):
+        r = c.get(url)
+        assert r.status_code == 200, url
+        body = r.get_json()
+        assert body["result"] == [] and body["executionInfo"]["stock-aggregation-state-store"][0] == "snapshot v0"
+    assert c.get("/streams-iq/range?filter=@.buys >").status_code == 400
+    sink(spark.createDataFrame([("A", 2.0, 0.0, 2)], schema), 1)
+    body = c.get("/streams-iq/keyquery/A").get_json()
+    assert [r["number_shares"] for r in body["result"]] == [2]
+
+
+def test_live_scan_resolves_the_newest_version_once(spark, tmp_path):
+    # a range, page or filtered read lists the manifest directory once
+    # and answers from the version it found
+    from kafkastreamsinteractivequeries_spark.plans.queries import FilteredRangeQuery, RangeQuery
+
+    schema = "symbol string, buys double, sells double, number_shares long"
+    sink = ManifestServingSink(str(tmp_path / "live"))
+    sink(spark.createDataFrame([("A", 1.0, 0.0, 1), ("B", 2.0, 0.0, 2)], schema), 0)
+    svc = LiveSnapshotQueryService(spark, sink)
+    latest, calls = sink.latest_version, []
+
+    def counted(*args):
+        calls.append(args)
+        return latest(*args)
+
+    sink.latest_version = counted
+    reads = [
+        lambda: svc.execute_response(RangeQuery.with_no_bounds()),
+        lambda: svc.execute_page(RangeQuery.with_no_bounds(), 1)[0],
+        lambda: svc.execute_response(FilteredRangeQuery.with_bounds("A", "B").predicate("@.buys > 1")),
+    ]
+    for read, want in zip(reads, [["A", "B"], ["A"], ["B"]]):
+        calls.clear()
+        resp = read()
+        assert sorted(r["symbol"] for r in resp.result) == want
+        assert resp.execution_info["stock-aggregation-state-store"][:2] == ["snapshot v0", "spark frame"]
+        assert len(calls) == 1
