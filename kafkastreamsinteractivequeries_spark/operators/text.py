@@ -1138,8 +1138,11 @@ def ngram_decontaminate_bloom(
     idx = train.sparkSession.range(nwords).select(
         F.col("id").cast("int").alias("word_idx")
     )
+    # one word per index: duplicate rows OR together, where a second
+    # row would lengthen the array and shift every probe after it
+    words = bloom_words.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
     warr = (
-        idx.join(bloom_words, "word_idx", "left")
+        idx.join(words, "word_idx", "left")
         .agg(
             F.transform(
                 F.array_sort(

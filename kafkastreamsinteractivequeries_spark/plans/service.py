@@ -20,7 +20,9 @@ from bisect import bisect_left, bisect_right
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
+from kafkastreamsinteractivequeries_spark.functions.predicate import arrow_predicate
 from kafkastreamsinteractivequeries_spark.plans.queries import (
+    FilteredRangeQuery,
     KeyQuery,
     MultiKeyQuery,
     Query,
@@ -51,14 +53,21 @@ class _DriverSnapshot:
     (``store/StoreDelegate.java:77-94``): null keys first, then UTF-8
     byte order, which is Spark's string order and Python's ``str``
     order.  Range reads bisect ``keys`` and convert only their slice of
-    ``table``; any other query runs Spark's own semantics over
-    ``frame()``, the same rows handed back to Spark on the first such
-    query."""
+    ``table``.  A filtered range whose predicate has an Arrow form
+    (``functions.predicate.arrow_predicate``) bisects the same way and
+    filters the slice in Arrow, as the reference filters the rows its
+    range iterator yields (``store/CustomQueryStore.java:68-97``).  Any
+    other query (key and multikey reads, and filtered ranges with a
+    regex, a nested path, mixed types, a NaN-holding float column or a
+    raw-JSON column) runs Spark's own semantics over ``frame()``, the
+    same rows handed back to Spark by the first such query; ranges and
+    Arrow filters never build it."""
 
-    __slots__ = ("table", "nulls", "keys", "_df", "_frame", "_frame_lock")
+    __slots__ = ("table", "nulls", "keys", "nan_columns", "_df", "_frame", "_frame_lock")
 
     def __init__(self, df: DataFrame, key_col: str):
         import pyarrow.compute as pc
+        from pyarrow import types
 
         table = df.toArrow()
         order = pc.sort_indices(table, sort_keys=[(key_col, "ascending")], null_placement="at_start")
@@ -66,6 +75,11 @@ class _DriverSnapshot:
         keys = self.table.column(key_col)
         self.nulls = keys.null_count
         self.keys = keys.to_pylist()[self.nulls:]
+        # float columns Spark compares by its NaN rule, not IEEE's
+        self.nan_columns = frozenset(
+            f.name for f, col in zip(self.table.schema, self.table.columns)
+            if types.is_floating(f.type) and pc.any(pc.is_nan(col)).as_py()
+        )
         self._df = df  # the session and schema ``frame`` is built with
         self._frame: DataFrame | None = None
         self._frame_lock = threading.Lock()
@@ -83,36 +97,42 @@ class _DriverSnapshot:
                     self._frame = self._df.sparkSession.createDataFrame(self.table, self._df.schema)
         return self._frame
 
-    def _span(self, query: Query) -> tuple[int, int] | None:
-        """Row positions ``[start, stop)`` of a range query, in key
-        order; None for any other query."""
-        if not isinstance(query, RangeQuery):
-            return None
-        if query.lower is None and query.upper is None:
-            return 0, self.table.num_rows  # unbounded: null keys too
+    def _slice(self, lower: str | None, upper: str | None, after: str | None):
+        """The rows with a key in ``[lower, upper]`` (both None: every
+        row, null keys too) and above ``after``, in key order."""
         base, keys = self.nulls, self.keys
-        return (
-            base + (0 if query.lower is None else bisect_left(keys, query.lower)),
-            base + (len(keys) if query.upper is None else bisect_right(keys, query.upper)),
-        )
+        if lower is None and upper is None:
+            start, stop = 0, self.table.num_rows
+        else:
+            start = base + (0 if lower is None else bisect_left(keys, lower))
+            stop = base + (len(keys) if upper is None else bisect_right(keys, upper))
+        if after is not None:
+            start = max(start, base + bisect_right(keys, after))
+        return self.table.slice(start, max(stop - start, 0))
 
-    def rows(self, query: Query, key_col: str, limit: int | None, after: str | None) -> list[dict]:
+    def rows(self, query: Query, key_col: str, limit: int | None, after: str | None) -> tuple[list[dict], list[str]]:
         """At most ``limit`` (falsy: all) rows of ``query`` with a key
-        above ``after`` (None: every key, null keys too), in key order."""
-        span = self._span(query)
-        if span is None:
+        above ``after`` (None: every key, null keys too), in key order,
+        and the ``executionInfo`` line naming how a filter or lookup ran
+        (none for a plain range)."""
+        if isinstance(query, RangeQuery):
+            table, how = self._slice(query.lower, query.upper, after), []
+        elif (
+            isinstance(query, FilteredRangeQuery)
+            and query.json_col is None
+            and (expr := arrow_predicate(query.predicate_src, self.table.schema, self.nan_columns)) is not None
+        ):
+            table = self._slice(query.lower, query.upper, after).filter(expr)
+            how = ["arrow filter"]
+        else:
             df = query.apply(self.frame(), key_col=key_col)
             if after is not None:
                 df = df.filter(F.col(key_col) > after)
             # a filter keeps the frame's key order, so a page needs no
             # sort (which would run a job)
             rows = df.limit(limit).collect() if limit else df.collect()
-            return [r.asDict() for r in rows]
-        start, stop = span
-        if after is not None:
-            start = max(start, self.nulls + bisect_right(self.keys, after))
-        n = stop - start if not limit else min(stop - start, limit)
-        return self.table.slice(start, n).to_pylist() if n > 0 else []
+            return [r.asDict() for r in rows], ["spark frame"]
+        return (table.slice(0, limit) if limit else table).to_pylist(), how
 
 
 class InteractiveQueryService:
@@ -124,20 +144,26 @@ class InteractiveQueryService:
     snapshot of ``serving_df``: a single Arrow collect, bounded by
     Spark's own ``spark.driver.maxResultSize``, with the rows sorted by
     key.  Later range reads and their keyset pages bisect it with no
-    Spark job.  Key, multikey and filtered reads run Spark's own
-    semantics over the same rows, handed back to Spark once by the
-    first of them, so every query type reads one snapshot.  That copy
-    doubles the rows' driver memory (Arrow in Python, rows in the JVM),
-    and it reads without a job only while its Arrow batches stay under
-    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
-    default); above that each such read runs a Spark job over the
-    driver's batches.  A frame whose key column is not a string, or
-    with a column that is not a str, bool, int or float, and a frame
-    that Spark refuses to collect as too large or that does not fit
-    the Python heap, are served by scanning ``serving_df`` per request
-    instead.  ``executionInfo`` names what was read: ``driver snapshot
-    of N rows`` or ``spark frame``.  The lazy ``execute`` always
-    composes on ``serving_df``.
+    Spark job, and so do filtered ranges whose predicate has an Arrow
+    form, which filter their slice in Arrow.  Key and multikey reads,
+    and filtered reads with a regex, a nested path, mixed types, a
+    float32 column against an integer or a NaN-holding float column,
+    run Spark's own semantics over the same rows, handed back to Spark
+    once by the first of them, so every query type reads one snapshot.
+    That copy doubles the rows' driver memory (Arrow in Python, rows in
+    the JVM), and it reads without a job only while its Arrow batches
+    stay under ``spark.sql.execution.arrow.localRelationThreshold`` (48
+    MB by default); above that each such read runs a Spark job over the
+    driver's batches.  A service whose traffic is only ranges and
+    Arrow-expressible filters never builds it.  A frame whose key
+    column is not a string, or with a column that is not a str, bool,
+    int or float, and a frame that Spark refuses to collect as too
+    large or that does not fit the Python heap, are served by scanning
+    ``serving_df`` per request instead.  ``executionInfo`` names what
+    was read: ``driver snapshot of N rows`` or ``spark frame``, and
+    after the snapshot line how a filter or lookup ran: ``arrow
+    filter`` or ``spark frame``.  The lazy ``execute`` always composes
+    on ``serving_df``.
     """
 
     def __init__(self, serving_df: DataFrame, key_col: str = "symbol", store_name: str = "stock-aggregation-state-store"):
@@ -193,8 +219,8 @@ class InteractiveQueryService:
         snap = self._driver_snapshot()
         if snap is None:
             return self._frame_rows(self._execute_with_info(query), limit, paged, after)
-        rows = snap.rows(query, self.key_col, limit, after if paged else None)
-        return rows, [f"driver snapshot of {snap.table.num_rows} rows"]
+        rows, how = snap.rows(query, self.key_col, limit, after if paged else None)
+        return rows, [f"driver snapshot of {snap.table.num_rows} rows"] + how
 
     def _frame_rows(
         self, frame: tuple[DataFrame, list[str]], limit: int | None, paged: bool = False, after: str | None = None

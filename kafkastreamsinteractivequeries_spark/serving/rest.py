@@ -29,8 +29,11 @@ table.  Point ``InteractiveQueryService`` at a compacted aggregate that
 does not change while it is served: its first request takes a driver
 snapshot of the frame (one collect, bounded by Spark's
 ``spark.driver.maxResultSize``; a frame Spark refuses is scanned per
-request instead), later ranges and pages run no Spark job, and key,
-multikey and filtered reads run none while the snapshot stays under
+request instead), later ranges, pages and filtered ranges whose
+predicate has an Arrow form run no Spark job and never copy the rows
+back to the JVM, and key, multikey and the other filtered reads (a
+regex, a nested path, mixed types) run Spark over such a copy, with no
+job while the snapshot stays under
 ``spark.sql.execution.arrow.localRelationThreshold``.  Serve the store
 the streaming upsert sink maintains (streaming/pipeline.py) through
 ``LiveSnapshotQueryService``: on a local store its key and multikey

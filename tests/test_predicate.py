@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from kafkastreamsinteractivequeries_spark.functions.predicate import (
     PredicateSyntaxError,
+    arrow_predicate,
     compile_predicate,
 )
 
@@ -107,6 +108,34 @@ def test_regex_match(agg_df):
 def test_syntax_errors(bad):
     with pytest.raises(PredicateSyntaxError):
         compile_predicate(bad)
+    with pytest.raises(PredicateSyntaxError):
+        arrow_predicate(bad, _fixture_table().schema)
+
+
+def _fixture_table():
+    import pyarrow as pa
+
+    return pa.table({"symbol": [r[0] for r in FIXTURE], "buys": [r[1] for r in FIXTURE],
+                     "sells": [r[2] for r in FIXTURE]})
+
+
+@pytest.mark.parametrize("src,expected", GOLDEN + [
+    ("$.[?(@.buys > @.sells)]", {"ALB"}),
+    ("@.buys > 299 && @.sells > 350 || @.symbol == 'BWB'", {"EAB", "BWB"}),
+    ("!(@.buys > @.sells || @.sells > @.buys)", {"BWB"}),
+    ("@.buys != @.sells", {"ALB", "EAB"}),
+    ("@.symbol != null && !@.buys == 333.0", {"ALB"}),
+])
+def test_golden_arrow(agg_df, src, expected):
+    # the Arrow form keeps the rows the Catalyst form keeps
+    table = _fixture_table()
+    assert {r.symbol for r in agg_df.filter(compile_predicate(src)).collect()} == expected
+    assert set(table.filter(arrow_predicate(src, table.schema)).column("symbol").to_pylist()) == expected
+
+
+@pytest.mark.parametrize("src", ["@.symbol =~ '^A'", "@.buys.x > 1", "@.symbol > 1", "@.nope > 1", "@.BUYS > 1"])
+def test_arrow_has_no_form_for_what_spark_answers_differently(src):
+    assert arrow_predicate(src, _fixture_table().schema) is None
 
 
 def test_predicate_pushes_to_scan(spark, tmp_path):

@@ -12,7 +12,10 @@
    key and multikey queries.
 4. The batch service's driver snapshot returns exactly what its lazy
    Spark path returns, for random frames and random key, multikey,
-   range and filtered queries, unpaged and paged.
+   range and filtered queries, unpaged and paged; a filtered read runs
+   in Arrow exactly when its predicate has an Arrow form.
+5. The Arrow emitter has no form for a predicate with a regex, a nested
+   path or a mixed-type comparison.
 """
 
 import math
@@ -21,7 +24,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from kafkastreamsinteractivequeries_spark.functions.predicate import compile_predicate
+from kafkastreamsinteractivequeries_spark.functions.predicate import arrow_predicate, compile_predicate
 
 # excluded from the default gate (property/fuzz suite); see pytest.ini
 pytestmark = pytest.mark.slow
@@ -44,11 +47,16 @@ STR_VALUES = ["CFLT", "ALB", "EAB", "ZZZ", "AAA", "MSFT", "NOPE"]
 OPS = [">", "<", ">=", "<=", "==", "!="]
 
 
+NUM_LITERALS = ["0", "-1", "7", "299", "-10", "333.0", "-0.5", "1e3", "2.5E-1", "-3e-2"]
+
+
 def _num_cmp(draw):
     f = draw(st.sampled_from(NUM_FIELDS))
     op = draw(st.sampled_from(OPS))
     if draw(st.booleans()):
         rhs = f"@.{draw(st.sampled_from(NUM_FIELDS))}"
+    elif draw(st.booleans()):
+        rhs = draw(st.sampled_from(NUM_LITERALS))
     else:
         rhs = str(draw(st.integers(min_value=-10, max_value=500)))
     return f"@.{f} {op} {rhs}"
@@ -59,12 +67,18 @@ def _str_cmp(draw):
     return f"@.symbol {op} '{draw(st.sampled_from(STR_VALUES))}'"
 
 
+def _row_leaf(draw):
+    """A comparison over ``ROWS``, negated or not."""
+    leaf = draw(st.booleans()) and _num_cmp(draw) or _str_cmp(draw)
+    return f"!{leaf}" if draw(st.integers(0, 3)) == 0 else leaf
+
+
 @st.composite
-def predicates(draw, depth=2):
+def predicates(draw, leaf=_row_leaf, depth=2):
     if depth == 0 or draw(st.integers(0, 2)) == 0:
-        return draw(st.booleans()) and _num_cmp(draw) or _str_cmp(draw)
-    left = draw(predicates(depth=depth - 1))
-    right = draw(predicates(depth=depth - 1))
+        return leaf(draw)
+    left = draw(predicates(leaf, depth=depth - 1))
+    right = draw(predicates(leaf, depth=depth - 1))
     conj = draw(st.sampled_from(["&&", "||"]))
     out = f"({left}) {conj} ({right})"
     if draw(st.booleans()):
@@ -73,7 +87,7 @@ def predicates(draw, depth=2):
 
 
 def _py_eval(src: str, row: dict) -> bool:
-    expr = src.replace("&&", " and ").replace("||", " or ").replace("!(", " not (")
+    expr = src.replace("&&", " and ").replace("||", " or ").replace("!(", " not (").replace("!@", " not @")
     for f in ["symbol", "buys", "sells", "number_shares"]:
         expr = expr.replace(f"@.{f}", f"row['{f}']")
     return bool(eval(expr, {"row": row}))  # noqa: S307 - test-only reference
@@ -421,12 +435,41 @@ def test_live_driver_reads_match_spark_reads(spark, tmp_path_factory, data):
 # ---------------------------------------------------------------------------
 
 SNAPSHOT_SCHEMA = "symbol string, f float, g double, i int, b boolean"
-# well-formed over the frame, then a malformed one (400) and one naming
-# an unknown column (AnalysisException)
-SNAPSHOT_PREDICATES = [
-    "@.f > 0", "@.i < 3 && @.b == true", "@.symbol == 'a'", "@.f >= @.g",
-    "!(@.b == true) || @.i == 2", "@.symbol > 'B'", "@.g == null", "@.f >", "@.nope > 1",
+SNAPSHOT_NUMBERS = ["0", "-1", "2", "0.5", "-0.0", "1e3", "-2.5E-1", "1e400", "2147483648", "-9223372036854775808"]
+# predicates Spark answers (or refuses) alike on every frame, but that
+# have no exact Arrow form: a regex, a nested path, and comparisons of
+# bool with number (refused by Spark's analyzer)
+NO_ARROW_LEAVES = [
+    "@.symbol =~ '/^[a-z].*/'", "@.f.x > 1", "@.symbol.y == 'a'", "@.b == 1", "@.i > false", "@.g != true",
 ]
+
+
+def _snapshot_operand(draw, kind):
+    if kind == "num":
+        return draw(st.sampled_from(["@.f", "@.g", "@.i"] + SNAPSHOT_NUMBERS))
+    if kind == "str":
+        return draw(st.sampled_from(["@.symbol", "'a'", "'B'", '"x:y"', "'\\'a'", "'\u00e9'", "''"]))
+    return draw(st.sampled_from(["@.b", "true", "false"]))
+
+
+def _snapshot_leaf(draw):
+    """A comparison over ``SNAPSHOT_SCHEMA``: numbers, strings and bools
+    compared among themselves, null tests, a regex, a nested path, a
+    mixed-type comparison, a literal against a literal, a field named in
+    another case, an unknown field and an integer outside int64,
+    negated or not."""
+    kind = draw(st.sampled_from(["num", "num", "num", "str", "str", "bool", "null", "other"]))
+    if kind == "null":
+        field = draw(st.sampled_from(["symbol", "f", "g", "i", "b", "nope"]))
+        leaf = f"@.{field} {draw(st.sampled_from(['==', '!=', '>']))} null"
+    elif kind == "other":
+        leaf = draw(st.sampled_from(NO_ARROW_LEAVES + [
+            "@.F > 0.5", "1 < 2", "@.nope > 1", "@.i < 9223372036854775808", "null == @.i",
+        ]))
+    else:
+        op = draw(st.sampled_from(OPS))
+        leaf = f"{_snapshot_operand(draw, kind)} {op} {_snapshot_operand(draw, kind)}"
+    return f"!{leaf}" if draw(st.integers(0, 3)) == 0 else leaf
 
 
 def _multiset(rows):
@@ -475,11 +518,20 @@ def test_batch_snapshot_reads_match_lazy_reads(spark, data):
     for r in (r.asDict() for r in df.collect()):
         with_key.setdefault(r["symbol"], []).append(r)
 
+    def evaluated_as(query, resp):
+        # a filtered read names its evaluator: Arrow whenever the
+        # predicate has an Arrow form over the snapshot
+        if isinstance(query, FilteredRangeQuery):
+            table, nan_columns = snap._snapshot.table, snap._snapshot.nan_columns
+            arrow = arrow_predicate(query.predicate_src, table.schema, nan_columns) is not None
+            assert resp.execution_info["stock-aggregation-state-store"][1] == ("arrow filter" if arrow else "spark frame")
+
     def same_pages(query, size, after):
         for _ in range(len(rows) + 2):
             (got, got_next), (want, want_next) = snap.execute_page(query, size, after), lazy.execute_page(query, size, after)
             if _same_refusal(got, want):
                 return
+            evaluated_as(query, got)
             # pages in key order; the rows of the page's last key may be
             # any of that key's rows when the page is full
             assert [r["symbol"] for r in got.result] == [r["symbol"] for r in want.result], (query, after)
@@ -498,6 +550,7 @@ def test_batch_snapshot_reads_match_lazy_reads(spark, data):
         if _same_refusal(got, want):
             return
         assert got.execution_info["stock-aggregation-state-store"][0] == f"driver snapshot of {len(rows)} rows"
+        evaluated_as(query, got)
         full = lazy.execute_response(query, collect_limit=None).result
         if limit and len(full) > limit:
             # a capped answer may be any ``limit`` of the rows
@@ -518,9 +571,30 @@ def test_batch_snapshot_reads_match_lazy_reads(spark, data):
         elif kind == "range":
             query = RangeQuery(lower, upper)
         else:
-            query = FilteredRangeQuery(lower, upper, data.draw(st.sampled_from(SNAPSHOT_PREDICATES), label="pred"))
+            src = data.draw(predicates(_snapshot_leaf) | st.sampled_from(["@.f >", "@.i > 1 &&"]), label="pred")
+            query = FilteredRangeQuery(lower, upper, src)
         if data.draw(st.booleans(), label="paged"):
             cursor = data.draw(st.none() | st.sampled_from(LIVE_KEYS + ["NOPE"]), label="cursor")
             same_pages(query, data.draw(st.integers(1, 5), label="page size"), cursor)
         else:
             same_rows(query, data.draw(st.sampled_from([None, 1, 3, 10_000]), label="collect_limit"))
+
+
+@settings(max_examples=200, deadline=None)
+@given(data=st.data())
+def test_arrow_emitter_refuses_regex_nested_paths_and_mixed_types(data):
+    import pyarrow as pa
+
+    schema = pa.schema([("symbol", pa.string()), ("f", pa.float32()), ("g", pa.float64()),
+                        ("i", pa.int32()), ("b", pa.bool_())])
+    tree = data.draw(predicates(_snapshot_leaf), label="tree")
+    refused = data.draw(st.sampled_from(NO_ARROW_LEAVES + [
+        "@.symbol > 1", "@.f == 'a'", "@.symbol == true", "'a' < @.i", "@.b >= 'x'", "@.f >= @.i", "@.f < 2",
+    ]), label="refused")
+    src = data.draw(st.sampled_from([
+        f"({tree}) && ({refused})", f"({refused}) || ({tree})", f"!{refused}", f"$.[?(({tree}) || !({refused}))]",
+    ]), label="src")
+    assert arrow_predicate(src, schema) is None, src
+    # a float column holding NaN is compared by Spark's rule, not IEEE's
+    assert arrow_predicate("@.g > 0.5", schema) is not None
+    assert arrow_predicate("@.g > 0.5", schema, frozenset({"g"})) is None

@@ -220,17 +220,33 @@ def _jobs_of(spark, *groups):
     return [list(tracker.getJobIdsForGroup(g)) for g in groups]
 
 
+ARROW_INFO = [SNAPSHOT_INFO, "arrow filter"]
+FRAME_INFO = [SNAPSHOT_INFO, "spark frame"]
+
+
 def test_batch_service_reads_run_no_spark_job(spark, service):
     # The first read collects the frame once (the positive control: its
     # jobs show the tracking works); every read after it is answered
-    # from the snapshot.
+    # from the snapshot.  Filtered reads run in Arrow and never hand the
+    # rows back to Spark; key reads do, with no job.
     svc = InteractiveQueryService(service.serving_df)
 
     def in_group(group, read):
         return _in_group(spark, group, read)
 
-    first = in_group("snapshot-build", lambda: svc.execute_response(KeyQuery.with_key("CFLT")))
-    assert [r["symbol"] for r in first.result] == ["CFLT"] and _info(first)[0] == SNAPSHOT_INFO
+    first = in_group("snapshot-build", lambda: svc.execute_page(
+        FilteredRangeQuery.with_bounds("CFLT", "ZELK").predicate("@.buys > @.sells"), 1)[0])
+    assert [r["symbol"] for r in first.result] == ["CFLT"] and _info(first)[:2] == ARROW_INFO
+
+    def filtered_reads():
+        out = [
+            svc.execute_response(FilteredRangeQuery.with_bounds("CFLT", "ZELK").predicate("@.buys > @.sells")),
+            svc.execute_page(FilteredRangeQuery.with_bounds(None, None).predicate("@.buys > 0"), 2, after="CFLT")[0],
+            svc.execute_page(FilteredRangeQuery.with_bounds("GOOGL", None).predicate("$.[?(@.sells <= 200)]"), 2)[0],
+            svc.execute_page(FilteredRangeQuery.with_bounds("GOOGL", None).predicate("$.[?(@.sells <= 200)]"), 2,
+                             after="MSFT")[0],
+        ]
+        return [(r.error_message, [row["symbol"] for row in r.result], _info(r)[:-1]) for r in out]
 
     def reads():
         out = [
@@ -240,65 +256,75 @@ def test_batch_service_reads_run_no_spark_job(spark, service):
             svc.execute_response(RangeQuery.with_lower_bound("MSFT")),
             svc.execute_response(RangeQuery.with_upper_bound("MSFT")),
             svc.execute_response(RangeQuery.with_range("CFLT", "MSFT")),
-            svc.execute_response(FilteredRangeQuery.with_bounds("CFLT", "ZELK").predicate("@.buys > @.sells")),
             svc.execute_page(RangeQuery.with_no_bounds(), 4)[0],
             svc.execute_page(RangeQuery.with_no_bounds(), 4, after="MSFT")[0],
-            svc.execute_page(FilteredRangeQuery.with_bounds(None, None).predicate("@.buys > 0"), 2, after="CFLT")[0],
         ]
-        return [(r.error_message, [row["symbol"] for row in r.result], _info(r)[0]) for r in out]
+        return [(r.error_message, [row["symbol"] for row in r.result], _info(r)[:-1]) for r in out]
 
-    got = in_group("snapshot-reads", reads)
-    assert got == [
-        (None, ["ZELK"], SNAPSHOT_INFO),
-        (None, ["CFLT", "MSFT"], SNAPSHOT_INFO),
-        (None, sorted(SYMBOLS), SNAPSHOT_INFO),
-        (None, ["MSFT", "SHMDF", "TWTR", "ZELK"], SNAPSHOT_INFO),
-        (None, ["CFLT", "GOOGL", "MSFT"], SNAPSHOT_INFO),
-        (None, ["CFLT", "GOOGL", "MSFT"], SNAPSHOT_INFO),
-        (None, ["CFLT"], SNAPSHOT_INFO),
-        (None, ["CFLT", "GOOGL", "MSFT", "SHMDF"], SNAPSHOT_INFO),
-        (None, ["SHMDF", "TWTR", "ZELK"], SNAPSHOT_INFO),
-        (None, ["GOOGL", "MSFT"], SNAPSHOT_INFO),
+    assert in_group("snapshot-filters", filtered_reads) == [
+        (None, ["CFLT"], ARROW_INFO),
+        (None, ["GOOGL", "MSFT"], ARROW_INFO),
+        (None, ["GOOGL", "MSFT"], ARROW_INFO),
+        (None, ["SHMDF", "TWTR"], ARROW_INFO),
+    ]
+    assert svc._snapshot._frame is None
+    assert in_group("snapshot-reads", reads) == [
+        (None, ["ZELK"], FRAME_INFO),
+        (None, ["CFLT", "MSFT"], FRAME_INFO),
+        (None, sorted(SYMBOLS), [SNAPSHOT_INFO]),
+        (None, ["MSFT", "SHMDF", "TWTR", "ZELK"], [SNAPSHOT_INFO]),
+        (None, ["CFLT", "GOOGL", "MSFT"], [SNAPSHOT_INFO]),
+        (None, ["CFLT", "GOOGL", "MSFT"], [SNAPSHOT_INFO]),
+        (None, ["CFLT", "GOOGL", "MSFT", "SHMDF"], [SNAPSHOT_INFO]),
+        (None, ["SHMDF", "TWTR", "ZELK"], [SNAPSHOT_INFO]),
     ]
     assert in_group("lazy-read", lambda: svc.execute(KeyQuery.with_key("CFLT")).count()) == 1
-    lazy, build, reads = _jobs_of(spark, "lazy-read", "snapshot-build", "snapshot-reads")
-    assert lazy and build and reads == []
+    lazy, build, filters, reads = _jobs_of(spark, "lazy-read", "snapshot-build", "snapshot-filters", "snapshot-reads")
+    assert lazy and build and filters == [] and reads == []
 
 
 def test_snapshot_above_the_local_relation_threshold_scans_with_spark(spark, service):
     # Above the threshold Spark keeps the snapshot's Arrow batches as an
-    # RDD on the driver, not a LocalRelation: key, multikey and filtered
-    # reads still answer from the snapshot, but each runs a Spark job,
-    # while ranges and their pages still bisect with none.
+    # RDD on the driver, not a LocalRelation: key, multikey and regex
+    # filtered reads still answer from the snapshot, but each runs a
+    # Spark job, while ranges, their pages and Arrow filters still run
+    # none and never build that copy.
     key = "spark.sql.execution.arrow.localRelationThreshold"
+    regex = FilteredRangeQuery.with_bounds(None, None).predicate("@.symbol =~ '/^[GM].*/'")
     spark.conf.set(key, "1")
     try:
         svc = InteractiveQueryService(service.serving_df)
         svc.execute_response(RangeQuery.with_no_bounds())  # builds the snapshot
 
+        def no_frame_reads():
+            return [
+                svc.execute_response(RangeQuery.with_range("CFLT", "MSFT")),
+                svc.execute_page(RangeQuery.with_no_bounds(), 4, after="MSFT")[0],
+                svc.execute_page(FilteredRangeQuery.with_bounds(None, None).predicate("@.buys > 0"), 2, after="CFLT")[0],
+            ]
+
         def frame_reads():
             return [
                 svc.execute_response(KeyQuery.with_key("ZELK")),
                 svc.execute_response(MultiKeyQuery.with_keys(["MSFT", "CFLT", "NOPE"])),
-                svc.execute_page(FilteredRangeQuery.with_bounds(None, None).predicate("@.buys > 0"), 2, after="CFLT")[0],
+                svc.execute_response(regex),
             ]
 
-        def range_reads():
-            return [
-                svc.execute_response(RangeQuery.with_range("CFLT", "MSFT")),
-                svc.execute_page(RangeQuery.with_no_bounds(), 4, after="MSFT")[0],
-            ]
-
-        got = _in_group(spark, "rdd-frame-reads", frame_reads) + _in_group(spark, "rdd-range-reads", range_reads)
+        got = _in_group(spark, "rdd-range-reads", no_frame_reads)
+        frame_built = svc._snapshot._frame is not None
+        got += _in_group(spark, "rdd-frame-reads", frame_reads)
     finally:
         spark.conf.unset(key)
-    assert [(r.error_message, [row["symbol"] for row in r.result], _info(r)[0]) for r in got] == [
-        (None, ["ZELK"], SNAPSHOT_INFO),
-        (None, ["CFLT", "MSFT"], SNAPSHOT_INFO),
-        (None, ["GOOGL", "MSFT"], SNAPSHOT_INFO),
-        (None, ["CFLT", "GOOGL", "MSFT"], SNAPSHOT_INFO),
-        (None, ["SHMDF", "TWTR", "ZELK"], SNAPSHOT_INFO),
+    assert not frame_built
+    assert [(r.error_message, [row["symbol"] for row in r.result], _info(r)[:-1]) for r in got] == [
+        (None, ["CFLT", "GOOGL", "MSFT"], [SNAPSHOT_INFO]),
+        (None, ["SHMDF", "TWTR", "ZELK"], [SNAPSHOT_INFO]),
+        (None, ["GOOGL", "MSFT"], ARROW_INFO),
+        (None, ["ZELK"], FRAME_INFO),
+        (None, ["CFLT", "MSFT"], FRAME_INFO),
+        (None, ["GOOGL", "MSFT"], FRAME_INFO),
     ]
+    assert got[-1].result == [r.asDict() for r in service.execute(regex).orderBy("symbol").collect()]
     frame_jobs, range_jobs = _jobs_of(spark, "rdd-frame-reads", "rdd-range-reads")
     assert frame_jobs and range_jobs == []
 

@@ -451,6 +451,36 @@ def test_bloom_word_table_is_bounded_and_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def test_bloom_words_with_a_duplicate_word_idx_give_the_same_verdicts(spark):
+    from kafkastreamsinteractivequeries_spark.operators.text import (
+        bloom_filter_grams,
+        ngram_decontaminate_bloom,
+    )
+
+    schema = "doc_id long, text string"
+    eval_docs = spark.createDataFrame([(1, "the quick brown fox jumps over the lazy dog")], schema)
+    train = spark.createDataFrame(
+        [(10, "a quick brown fox jumps high"), (11, "nothing in common here at all"),
+         (12, "over the lazy dog again")],
+        schema,
+    )
+    words = bloom_filter_grams(eval_docs, n=3, num_bits=1 << 12, num_hashes=4)
+    # each word as two rows of one word_idx that OR to it: its lowest
+    # set bit, and the rest
+    split = words.select("word_idx", F.expr("word & -word").alias("word")).unionByName(
+        words.select("word_idx", F.expr("word & (word - 1)").alias("word"))
+    )
+
+    def verdicts(bloom_words):
+        out = ngram_decontaminate_bloom(train, bloom_words, n=3, num_bits=1 << 12, num_hashes=4)
+        return sorted(tuple(r) for r in out.collect())
+
+    assert split.count() == 2 * words.count()
+    want = verdicts(words)
+    assert [d for d, _, hit in want if hit] == [10, 12]
+    assert verdicts(split) == want
+
+
 def test_winnowing_full_matches_python_reference(spark):
     """The Spark selection must equal a direct Python implementation of
     the winnowing algorithm, and any shared substring of >= window+k-1
